@@ -48,13 +48,16 @@ def local_frame(
     rows: Iterable,
     schema: T.StructType | str,
 ) -> DataFrame:
-    """Small driver-side ``rows`` -> single-partition DataFrame.
+    """Small driver-side ``rows`` -> DataFrame, one partition up to
+    ``LOCAL_FRAME_MAX_ROWS`` rows.
 
     Drop-in for ``spark.createDataFrame(rows, schema)`` at call sites
     whose row count is bounded by construction (driver reductions,
-    probe/query tables, static dims). The result is one partition —
-    right-sized for frames this small, and exactly what their consumers
-    (broadcast builds, tiny aggregates) want.
+    probe/query tables, static dims). Up to ``LOCAL_FRAME_MAX_ROWS``
+    rows the result is one partition — right-sized for frames this
+    small, and exactly what their consumers (broadcast builds, tiny
+    aggregates) want. Above the cap it is a plain ``createDataFrame``
+    at the session's default width.
     """
     rows = list(rows)
     struct = _as_struct_type(spark, schema)

@@ -522,16 +522,14 @@ def doc_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.dedup import STOP_SHINGLE_DF, _doc_shingles
     from ..session import CKPT_LEVEL
-    from ..sources.catalog import SPREAD_BYTES_PER_TASK
 
-    # Full-width spread, NOT the r20 bytes-proportional default (÷32
-    # keeps every fixture SF at the core cap; identical from sf1 up):
-    # unlike the other _doc_shingles consumers this query does NOT
-    # checkpoint the shingle frame (the posting checkpoint downstream is
-    # the shared one), so the tokenize+shingle pass RE-RUNS for the df
-    # cut and the posting build — the narrow default was measured 1.18×
-    # slower end-to-end at sf0.1.
-    sh = _doc_shingles(spark, sf_dir, bytes_per_task=SPREAD_BYTES_PER_TASK // 32)
+    # Full-width spread, NOT the r20 bytes-proportional default (identical
+    # from sf1 up): unlike the other _doc_shingles consumers this query does
+    # NOT checkpoint the shingle frame (the posting checkpoint downstream is
+    # the shared one), so the tokenize+shingle pass RE-RUNS for the df cut
+    # and the posting build — the narrow default was measured 1.18× slower
+    # end-to-end at sf0.1.
+    sh = _doc_shingles(spark, sf_dir, full_width=True)
     # df-cap BEFORE collecting posting lists: a stop-shingle's list is
     # never materialized (at corpus scale a hot shingle may appear in
     # millions of docs; the count-then-semi-join keeps every collected

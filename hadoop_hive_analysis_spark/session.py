@@ -33,9 +33,10 @@ class ReleaseResult(NamedTuple):
 # level: per-row on-heap objects thrash the GC during downstream sorts
 # and — because localCheckpoint blocks are freed asynchronously by the
 # ContextCleaner — ACCUMULATE across queries sharing one JVM. Measured
-# twice: the r8 tfidf A/B (scripts/ab_tfidf_cosine.py — back-to-back
-# deserialized runs degrade 15.3→8.7→18.1 s in one 8 GiB JVM; serialized
-# levels them) and an r15 sf1 mini-pack A/B (6 dedup queries × 3 reps,
+# twice: the r8 tfidf A/B (`git show 748234d:scripts/ab_tfidf_cosine.py`
+# — back-to-back deserialized runs degrade 15.3→8.7→18.1 s in one 8 GiB
+# JVM; serialized levels them) and an r15 sf1 mini-pack A/B (6 dedup
+# queries × 3 reps,
 # one JVM, interleaved vs the prior tree: serialized 131 s total vs
 # deserialized 158 s, worst first-rep outlier halved). Serialized blocks
 # are flat buffers ~5× smaller; MEMORY_AND_DISK spills only under

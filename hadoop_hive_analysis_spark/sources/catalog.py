@@ -147,10 +147,8 @@ SPREAD_GATE_STATS: dict[str, int] = {"static": 0, "fallback": 0}
 # width so each task carries real work (~0.25 s CPU at the measured
 # ~1 s/MB of the tokenize→shingle→hash transforms) instead of always
 # fanning to the full core count. See spread_small_scan's docstring for
-# the measurements; env-overridable for cluster profiles.
-SPREAD_BYTES_PER_TASK = (
-    int(os.environ.get("SPARK_GRAFT_SPREAD_KB_PER_TASK", "64")) * 1024
-)
+# the measurements.
+SPREAD_BYTES_PER_TASK = 64 * 1024
 
 _SPREAD_VERDICTS: dict[tuple, bool] = {}
 
@@ -191,7 +189,7 @@ def _scan_parallelism(files: list[str]) -> tuple[tuple, int, int]:
     return tuple(key), groups, total
 
 
-def spread_small_scan(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
+def spread_small_scan(df: DataFrame, full_width: bool = False) -> DataFrame:
     """Round-robin-repartition ``df`` up to the session's default
     parallelism — ONLY when the scan cannot split that far on its own.
 
@@ -236,17 +234,18 @@ def spread_small_scan(df: DataFrame, bytes_per_task: int | None = None) -> DataF
     dedup_minhash_lsh/dedup_collapse/corpus_clean ±5% (noise), family
     total ratio 0.915. Scale-honest: at sf1 the table already hits the
     core cap (width unchanged), and at real volume the gate itself is a
-    no-op. Env-tunable for cluster profiles via
-    ``SPARK_GRAFT_SPREAD_KB_PER_TASK``.
+    no-op. The bytes-proportional rule applies to file scans only: a
+    non-file source takes the dynamic-probe fallback below, which always
+    spreads to the full default parallelism.
 
-    ``bytes_per_task`` overrides the default for call sites whose
-    DOWNSTREAM work per input byte is far above the family baseline —
-    a checkpoint that feeds a broadcast-probe self-join inherits this
-    width for the join itself (dedup_simhash: quadratic in band
-    occupancy — measured 1.60× slower under a narrow width), or a frame
-    recomputed by several consumers (doc_tfidf_cosine_pairs, 1.18×
-    slower narrow). Both pass ÷32, which keeps them at full width at
-    every fixture SF (identical to the pre-r20 behavior).
+    ``full_width=True`` sets the width to the session's default
+    parallelism for call sites whose DOWNSTREAM work per input byte is
+    far above the family baseline — a checkpoint that feeds a
+    broadcast-probe self-join inherits this width for the join itself
+    (dedup_simhash: quadratic in band occupancy — measured 1.60× slower
+    under a narrow width), or a frame recomputed by several consumers
+    (doc_tfidf_cosine_pairs, 1.18× slower narrow). The spread still
+    fires only when the scan cannot reach that width on its own.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
@@ -283,8 +282,9 @@ def spread_small_scan(df: DataFrame, bytes_per_task: int | None = None) -> DataF
     open_cost = _byte_size(
         spark.conf.get("spark.sql.files.openCostInBytes", "4MB")
     )
-    bpt = SPREAD_BYTES_PER_TASK if bytes_per_task is None else bytes_per_task
-    width = min(target, max(1, -(-total_bytes // bpt)))
+    width = target if full_width else min(
+        target, max(1, -(-total_bytes // SPREAD_BYTES_PER_TASK))
+    )
     key = (stat_key, target, max_part, open_cost, width)
     verdict = _SPREAD_VERDICTS.get(key)
     if verdict is None:

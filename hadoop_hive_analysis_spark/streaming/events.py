@@ -250,20 +250,6 @@ def _pinned_shuffle_partitions(spark: SparkSession, n: int):
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-# Measurement hook (scripts/scaling_streaming_replay.py): when set to a
-# list, every AvailableNow drain in this module appends its final
-# StreamingQuery progress dicts (one per microbatch, dict-like
-# StreamingQueryProgress objects carrying stateOperators.numRowsTotal)
-# so scaling harnesses can record state-store volume without changing
-# any engine return value. Never set on production paths.
-PROGRESS_SINK: list | None = None
-
-
-def _capture_progress(q) -> None:
-    if PROGRESS_SINK is not None:
-        PROGRESS_SINK.extend(q.recentProgress)
-
-
 def run_available_now(
     sdf: DataFrame,
     query_name: str,
@@ -304,7 +290,6 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-        _capture_progress(q)
     return spark.table(query_name)
 
 
@@ -728,7 +713,6 @@ def events_stream_left_join_replay(spark: SparkSession, sf_dir: str) -> DataFram
                 .start()
             )
             q.awaitTermination()
-            _capture_progress(q)
 
     wm_key = "spark.sql.streaming.multipleWatermarkPolicy"
     prev_policy = spark.conf.get(wm_key, None)

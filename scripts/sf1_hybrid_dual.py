@@ -2,8 +2,8 @@
 """sf1-scale dual run for hybrid BM25+vector RRF retrieval (SCALING.md).
 
 ``doc_hybrid_search_rrf`` executed by BOTH engines on a 50k-doc corpus
-(10 renamed copies of sf0.1 documents via the ``scaling_minhash``
-builder, embeddings carried over unscaled — lexical candidates then
+(the ``measure.py`` documents scaler at 10x: sf0.1 documents plus 9
+renamed copies, embeddings carried over unscaled — lexical candidates then
 span the full 50k-id space while vector candidates stay in the
 embedding id range, exercising the one-sided-fusion path at scale),
 with the fused ranking hash-compared in full.
@@ -27,7 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scaling_minhash import BASE_SF_DIR, build_scaled_corpus, cpu_seconds  # noqa: E402
+from measure import build_sf_dir, tree_cpu_s  # noqa: E402
 
 
 def main() -> None:
@@ -41,19 +41,15 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    d = build_scaled_corpus(spark, 10)
-    shutil.copy(
-        os.path.join(BASE_SF_DIR, "embeddings.parquet"),
-        os.path.join(d, "embeddings.parquet"),
-    )
+    d = build_sf_dir(spark, ("documents",), 10)
     try:
         t0 = time.perf_counter()
-        c0 = cpu_seconds(spark)
+        c0 = tree_cpu_s(os.getpid())
         df = rtr.doc_hybrid_search_rrf(spark, d)
         cols = sorted(df.columns)
         srows = sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
         wall = round(time.perf_counter() - t0, 3)
-        cpu = round(cpu_seconds(spark) - c0, 2)
+        cpu = round(tree_cpu_s(os.getpid()) - c0, 2)
 
         con = duckdb.connect()
         con.execute(

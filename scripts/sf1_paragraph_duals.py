@@ -2,9 +2,9 @@
 """sf1-scale dual runs for the paragraph-dedup family (SCALING.md).
 
 ``dedup_paragraphs`` and ``paragraph_scrub`` executed by BOTH engines on
-the same 50k-doc paragraph-structured corpus (the ``scaling_paragraphs``
-builder at 10×: ~10 blank-line paragraphs per doc, constant-rate planted
-boilerplate), with the full result hash-compared.
+the same 50k-doc paragraph-structured corpus (the ``measure.py``
+``paragraphs`` corpus at 10×: ~10 blank-line paragraphs per doc,
+constant-rate planted boilerplate), with the full result hash-compared.
 
 The point: the canonical-instance contract (min (doc_id, idx) struct
 comparison), the re-assembly order (sort on idx before extraction vs
@@ -27,8 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scaling_minhash import cpu_seconds, peak_mem_mb  # noqa: E402
-from scaling_paragraphs import build_paragraph_corpus  # noqa: E402
+from measure import build_sf_dir, peak_rss_mb, tree_cpu_s  # noqa: E402
 
 
 def main() -> None:
@@ -42,7 +41,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    d = build_paragraph_corpus(spark, 10)
+    d = build_sf_dir(spark, "paragraphs", 10)
     ops = [
         ("dedup_paragraphs", dedup.dedup_paragraphs, dedup.DEDUP_PARAGRAPHS_SQL),
         ("paragraph_scrub", dedup.paragraph_scrub, dedup.PARAGRAPH_SCRUB_SQL),
@@ -56,12 +55,12 @@ def main() -> None:
         all_match = True
         for name, fn, sql in ops:
             t0 = time.perf_counter()
-            c0 = cpu_seconds(spark)
+            c0 = tree_cpu_s(os.getpid())
             df = fn(spark, d)
             cols = sorted(df.columns)
             srows = sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
             wall = round(time.perf_counter() - t0, 3)
-            cpu = round(cpu_seconds(spark) - c0, 2)
+            cpu = round(tree_cpu_s(os.getpid()) - c0, 2)
             t1 = time.perf_counter()
             res = con.execute(sql)
             ocols = [x[0] for x in res.description]
@@ -90,7 +89,7 @@ def main() -> None:
                     "summary": {
                         "metric": "sf1_paragraph_duals",
                         "all_match": all_match,
-                        "peak_mem_mb": peak_mem_mb(spark),
+                        "peak_mem_mb": peak_rss_mb(spark),
                     }
                 }
             )

@@ -2,8 +2,8 @@
 """sf1-scale dual runs for the two deterministic-hash sampling ops
 (SCALING.md; judge r7 stretch): ``train_priority_sample`` and
 ``data_mixture_resample`` executed by BOTH engines on the same
-sf1-equivalent corpus (10 renamed copies of sf0.1 → 50k docs, the
-``scaling_minhash`` builder), with the full result hash-compared.
+sf1-equivalent corpus (sf0.1 plus 9 renamed copies → 50k docs, the
+``measure.py`` documents scaler), with the full result hash-compared.
 
 The point: both ops' membership decisions ride exact integer hash
 arithmetic (md5-based h64 priorities / ppm thresholds). The driver
@@ -26,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scaling_minhash import build_scaled_corpus, cpu_seconds, peak_mem_mb  # noqa: E402
+from measure import build_sf_dir, peak_rss_mb, tree_cpu_s  # noqa: E402
 
 
 def main() -> None:
@@ -38,7 +38,7 @@ def main() -> None:
     spark = get_spark("hha-sf1-duals", extra_conf={"spark.driver.memory": "8g"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    d = build_scaled_corpus(spark, 10)
+    d = build_sf_dir(spark, ("documents",), 10)
     ops = [
         ("train_priority_sample", tp.train_priority_sample,
          tp.TRAIN_PRIORITY_SAMPLE_SQL),
@@ -54,14 +54,14 @@ def main() -> None:
         all_match = True
         for name, fn, sql in ops:
             t0 = time.perf_counter()
-            c0 = cpu_seconds(spark)
+            c0 = tree_cpu_s(os.getpid())
             df = fn(spark, d)
             cols = sorted(df.columns)
             srows = sorted(
                 tuple(str(r[c]) for c in cols) for r in df.collect()
             )
             wall = round(time.perf_counter() - t0, 3)
-            cpu = round(cpu_seconds(spark) - c0, 2)
+            cpu = round(tree_cpu_s(os.getpid()) - c0, 2)
             t1 = time.perf_counter()
             res = con.execute(sql)
             ocols = [x[0] for x in res.description]
@@ -92,7 +92,7 @@ def main() -> None:
                     "summary": {
                         "metric": "sf1_sampling_duals",
                         "all_match": all_match,
-                        "peak_mem_mb": peak_mem_mb(spark),
+                        "peak_mem_mb": peak_rss_mb(spark),
                     }
                 }
             )

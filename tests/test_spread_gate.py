@@ -56,23 +56,53 @@ def test_non_file_source_takes_fallback(spark):
     assert SPREAD_GATE_STATS["static"] == before["static"]
 
 
+def _scan_fans_out(spark, df, width) -> tuple[bool, int]:
+    """(spread verdict, total bytes) for ``df`` at ``width``, computed as
+    ``spread_small_scan`` does: the spread fires only when the scan's own
+    parallelism, ``min(row groups, splits)``, is below the width."""
+    from hadoop_hive_analysis_spark.sources.catalog import (
+        _byte_size,
+        _scan_parallelism,
+    )
+
+    files = df.inputFiles()
+    _, row_groups, total_bytes = _scan_parallelism(files)
+    max_part = _byte_size(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
+    open_cost = _byte_size(spark.conf.get("spark.sql.files.openCostInBytes", "4MB"))
+    padded = total_bytes + len(files) * open_cost
+    max_split = min(max_part, max(open_cost, padded // spark.sparkContext.defaultParallelism))
+    splits = max(1, -(-padded // max_split))
+    return min(row_groups, splits) < width, total_bytes
+
+
 def test_spread_width_is_bytes_proportional(spark, sf_dir):
     """r20: the spread width follows input bytes (SPREAD_BYTES_PER_TASK
     per task, capped at the core count) — a tiny table must not fan out
     to full width, where per-task fixed cost dominates the ~50 ms of
     real work each task would carry."""
-    from hadoop_hive_analysis_spark.sources.catalog import (
-        SPREAD_BYTES_PER_TASK,
-        _scan_parallelism,
-    )
+    from hadoop_hive_analysis_spark.sources.catalog import SPREAD_BYTES_PER_TASK
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    df = spark.read.parquet(path)
-    _, _, total_bytes = _scan_parallelism(df.inputFiles())
+    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     cores = spark.sparkContext.defaultParallelism
+    _, total_bytes = _scan_fans_out(spark, df, cores)
     want = min(cores, max(1, -(-total_bytes // SPREAD_BYTES_PER_TASK)))
+    fires, _ = _scan_fans_out(spark, df, want)
     out = spread_small_scan(df)
-    assert out.rdd.getNumPartitions() == want
+    if fires:
+        assert out.rdd.getNumPartitions() == want
+    else:
+        assert out.rdd.getNumPartitions() == df.rdd.getNumPartitions()
     # scale-honest cap: a table of >= cores x SPREAD_BYTES_PER_TASK
     # would spread to exactly the core count (the pre-r20 behavior)
     assert want <= cores
+
+
+def test_full_width_spreads_to_default_parallelism(spark, sf_dir):
+    """``full_width=True`` ignores the bytes rule: a scan narrower than
+    the core count spreads to exactly ``defaultParallelism``."""
+    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    cores = spark.sparkContext.defaultParallelism
+    fires, _ = _scan_fans_out(spark, df, cores)
+    out = spread_small_scan(df, full_width=True)
+    assert fires, "the sf0.001 documents file scans narrower than the cores"
+    assert out.rdd.getNumPartitions() == cores
