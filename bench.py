@@ -211,6 +211,8 @@ def main() -> None:
     # be visible in the artifact, and "0" is the proof the pack ran with
     # fresh block state throughout (advisor r16).
     out["release_residual_max"] = _release_residual_max
+    # the task slots the walls were measured on
+    out["cpus"] = spark.sparkContext.defaultParallelism
     _emit(out, core_queries={n for n, s in QUERIES.items() if s.driver})
     spark.stop()
 
@@ -283,7 +285,8 @@ def _emit(
         # already rounded + core-restricted by the prune chain above).
         # host_speed_factor and release_residual_max ride along (judge
         # r18 item 8): every flag adjudication starts from those two
-        # numbers, so they must survive even the minimal line.
+        # numbers, so they must survive even the minimal line; so does
+        # cpus, without which walls from different hosts do not compare.
         minimal = {
             "metric": slim["metric"],
             "value": slim["value"],
@@ -291,7 +294,7 @@ def _emit(
             "queries": slim["queries"],
             "sf": slim["sf"],
         }
-        for k in ("host_speed_factor", "release_residual_max"):
+        for k in ("host_speed_factor", "release_residual_max", "cpus"):
             if k in slim:
                 minimal[k] = slim[k]
         s = line(minimal)

@@ -5,10 +5,11 @@ extensions, multimodal plumbing.
 Kept separate from :mod:`.registry` so the reference-parity pack never
 depends on extension imports.
 
-Ordering is part of the driver contract: the driver scores a bounded
-prefix of the registry, so ORACLE-CHECKED queries register first (the
-dedup/text pack — the engine's headline surface — leading), rows-only
-checks trail, and the ``*_sql`` duals are pytest-only (``driver=False``).
+Which entries the driver scores is decided by ``registry.DRIVER_WINDOW``
+alone; registration order only fixes the order of ``query_map()``.
+Oracle-checked queries register first (the dedup/text pack — the
+engine's headline surface — leading), rows-only checks trail, and the
+relational ``*_sql`` duals close the list.
 """
 
 from __future__ import annotations
@@ -48,93 +49,78 @@ def build() -> dict:
     q["dedup_exact"] = QuerySpec(
         dedup.dedup_exact, dedup.DEDUP_EXACT_SQL, "ext: exact dedup"
     )
-    # Rotated out of the driver window in round 6 (slot went to
-    # duplicated_spans): MinHash-LSH keeps banded shingle-dedup signal
-    # driver-visible, and this query's stop-shingle anti-join cut stays
-    # plan-pinned in tests/test_plans.py. Keeps pytest parity + bench.
+    # The stop-shingle anti-join cut is plan-pinned in
+    # tests/test_plans.py.
     q["dedup_ngram_jaccard"] = QuerySpec(
         dedup.dedup_ngram_jaccard,
         dedup.DEDUP_NGRAM_JACCARD_SQL,
         "ext: n-gram Jaccard near-dup",
-        driver=False,
     )
-    # Staged r9 (r10 rotation candidate): the exact edit-distance
-    # contract (OCR noise / template fills) — shingle-candidate
-    # generation + two exact lower-bound prefilters keep the O(len²)
-    # levenshtein verify on candidates only, never the cross product.
+    # The exact edit-distance contract (OCR noise / template fills) —
+    # shingle-candidate generation + two exact lower-bound prefilters
+    # keep the O(len²) levenshtein verify on candidates only, never the
+    # cross product.
     q["dedup_editdistance"] = QuerySpec(
         dedup.dedup_editdistance,
         dedup.DEDUP_EDITDISTANCE_SQL,
         "ext: edit-distance near-dup (shingle candidates, length lower "
         "bound, levenshtein<=10 verify on candidates only)",
-        driver=False,
     )
-    # Round-9 additions, staged for the r10 rotation: RefinedWeb/
-    # MassiveText-style EXACT PARAGRAPH dedup — the granularity between
-    # whole-doc digests and stride-1 span hashes. Skew-safe by
-    # construction (partial-agg count + min-struct canonical selection,
-    # never a hot row_number window). The fixture corpus has no
-    # blank-line paragraphs or exact-dup docs, so the fixture rows are a
-    # clean-corpus report (the dHash precedent) — planted multi-
-    # paragraph corpora in tests/test_dedup_paragraphs.py carry the
-    # dup/scrub signal.
+    # RefinedWeb/MassiveText-style EXACT PARAGRAPH dedup — the
+    # granularity between whole-doc digests and stride-1 span hashes.
+    # Skew-safe by construction (partial-agg count + min-struct
+    # canonical selection, never a hot row_number window). The fixture
+    # corpus has no blank-line paragraphs or exact-dup docs, so the
+    # fixture rows are a clean-corpus report (the dHash precedent) —
+    # planted multi-paragraph corpora in tests/test_dedup_paragraphs.py
+    # carry the dup/scrub signal.
     q["dedup_paragraphs"] = QuerySpec(
         dedup.dedup_paragraphs,
         dedup.DEDUP_PARAGRAPHS_SQL,
         "ext: paragraph-level exact dedup report (blank-line segments, "
         "partial-agg canonical selection, skew-safe)",
-        driver=False,
     )
     q["paragraph_scrub"] = QuerySpec(
         dedup.paragraph_scrub,
         dedup.PARAGRAPH_SCRUB_SQL,
         "ext: paragraph-level scrub (drop non-canonical dup paragraphs, "
         "deterministic re-assembly, scrubbed text hashed)",
-        driver=False,
     )
-    # Round-8 addition, staged for the r9 rotation: the OTHER classical
-    # set-similarity candidate generator — PPJoin-style prefix
-    # filtering (rarest-first canonical order, prefix-only join, exact
-    # candidate-restricted verify). Shares the full-join query's oracle
-    # (identical contract, different algorithm — the clusters/bigstar
-    # precedent); completeness + pruning ratio pinned in tests.
+    # The OTHER classical set-similarity candidate generator —
+    # PPJoin-style prefix filtering (rarest-first canonical order,
+    # prefix-only join, exact candidate-restricted verify). Shares the
+    # full-join query's oracle (identical contract, different algorithm
+    # — the clusters/bigstar precedent); completeness + pruning ratio
+    # pinned in tests.
     q["dedup_prefix_filter_jaccard"] = QuerySpec(
         dedup.dedup_prefix_filter_jaccard,
         dedup.DEDUP_NGRAM_JACCARD_SQL,  # same contract, other algorithm
         "ext: n-gram Jaccard near-dup via PPJoin prefix filtering "
         "(prefix-only candidate join, ~5x posting cut at t=0.8)",
-        driver=False,
     )
     q["dedup_minhash_lsh"] = QuerySpec(
         dedup.dedup_minhash_lsh,
         dedup.DEDUP_MINHASH_LSH_SQL,
         "ext: MinHash+LSH near-dup",
     )
-    # Rotated out of the driver window in round 7 (slot went to
-    # duplicated_spans_topk): MinHash-LSH keeps banded shingle near-dup
-    # driver-visible, and SimHash's one-pass signature + pigeonhole
-    # byte-band join stays pytest-parity + bench.
+    # SimHash: one-pass signature + pigeonhole byte-band join.
     q["dedup_simhash"] = QuerySpec(
         dedup.dedup_simhash,
         dedup.DEDUP_SIMHASH_SQL,
         "ext: SimHash near-dup",
-        driver=False,
     )
-    # Round-5 addition: partial-overlap coverage the doc-level strategies
-    # miss (Lee-et-al-style exact-substring profile). Promoted in the
-    # round-6 rotation (slot from dedup_ngram_jaccard).
+    # Partial-overlap coverage the doc-level strategies miss
+    # (Lee-et-al-style exact-substring profile).
     q["duplicated_spans"] = QuerySpec(
         dedup.duplicated_spans,
         dedup.DUPLICATED_SPANS_SQL,
         "ext: cross-document exact-substring duplication profile "
         "(stride-1 token-window hashes, df-capped dup set)",
     )
-    # Promoted in the round-7 rotation (slots from dedup_simhash and
-    # multimodal_decode_stub): the observability and REMOVAL halves of
-    # exact-substring dedup — the profile (duplicated_spans) says how
-    # much text is copied, the top-K report says WHAT it is (with an
-    # (example_doc, example_start) pointer locating the passage), the
-    # scrub actually deletes it.
+    # The observability and REMOVAL halves of exact-substring dedup —
+    # the profile (duplicated_spans) says how much text is copied, the
+    # top-K report says WHAT it is (with an (example_doc, example_start)
+    # pointer locating the passage), the scrub actually deletes it.
     q["duplicated_spans_topk"] = QuerySpec(
         dedup.duplicated_spans_topk,
         dedup.DUPLICATED_SPANS_TOPK_SQL,
@@ -149,49 +135,43 @@ def build() -> dict:
         "deleted via merged coverage intervals, scrubbed text hashed; "
         "corpus text never shuffles)",
     )
-    # Round-7 addition, staged for the r8 rotation: the normalized
-    # first pass real pipelines run before the raw digest (case/
-    # whitespace variants), with a built-in value report vs raw.
+    # The normalized first pass real pipelines run before the raw digest
+    # (case/whitespace variants), with a built-in value report vs raw.
     q["dedup_exact_normalized"] = QuerySpec(
         dedup.dedup_exact_normalized,
         dedup.DEDUP_EXACT_NORMALIZED_SQL,
         "ext: normalized exact dedup (lower/ws-collapse/trim digest, "
         "one shuffle; reports extra dups found beyond the raw digest)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: dedup observability
-    # sliced by feed — the per-source duplicate-rate alarm (a feed whose
-    # rate jumps is re-crawling or looping).
+    # Dedup observability sliced by feed — the per-source duplicate-rate
+    # alarm (a feed whose rate jumps is re-crawling or looping).
     q["dedup_rate_by_source"] = QuerySpec(
         dedup.dedup_rate_by_source,
         dedup.DEDUP_RATE_BY_SOURCE_SQL,
         "ext: per-source exact-duplicate rate (one (source, digest) "
         "partial-agg shuffle, exact ppm rate)",
-        driver=False,
     )
-    # Round-8 additions, staged for the r9 rotation: the ASYMMETRIC
-    # similarity the symmetric family misses (quote/excerpt containment)
-    # and the pre-removal observability report over the dup graph.
+    # The ASYMMETRIC similarity the symmetric family misses
+    # (quote/excerpt containment) and the pre-removal observability
+    # report over the dup graph.
     q["dedup_containment"] = QuerySpec(
         dedup.dedup_containment,
         dedup.DEDUP_CONTAINMENT_SQL,
         "ext: containment near-dup (|A∩B|/min — catches excerpts "
         "Jaccard misses; integer cross-multiplied threshold, "
         "deterministic small/big orientation)",
-        driver=False,
     )
     q["dedup_family_profile"] = QuerySpec(
         dedup.dedup_family_profile,
         dedup.DEDUP_FAMILY_PROFILE_SQL,
         "ext: dup-family size histogram (star-contraction CC + two "
         "bounded aggs; boilerplate-vs-mirror diagnosis before removal)",
-        driver=False,
     )
-    # Round-9 addition, staged for the r10 rotation: the transitive-
-    # closure AUDIT — per-cluster verified-pair density vs the clique
-    # bound + min/mean verified Jaccard in exact ppm; `chained` flags
-    # clusters whose collapse rests on A~B~C transitivity rather than
-    # direct evidence. Pairs→CC is the collapse path's own machinery.
+    # The transitive-closure AUDIT — per-cluster verified-pair density
+    # vs the clique bound + min/mean verified Jaccard in exact ppm;
+    # `chained` flags clusters whose collapse rests on A~B~C
+    # transitivity rather than direct evidence. Pairs→CC is the collapse
+    # path's own machinery.
     from ..operators import components as comps
 
     q["dedup_cluster_quality"] = QuerySpec(
@@ -199,7 +179,6 @@ def build() -> dict:
         comps.DEDUP_CLUSTER_QUALITY_SQL,
         "ext: near-dup cluster quality audit (pair density vs clique "
         "bound, min/mean verified Jaccard, chained-cluster flag)",
-        driver=False,
     )
     q["dedup_embedding_lsh"] = QuerySpec(
         similarity.dedup_embedding_lsh,
@@ -211,46 +190,34 @@ def build() -> dict:
     # --- Dedup clustering (iterative) ---
     from ..operators import components
 
-    # pytest-parity only (driver=False): bigstar shares this oracle and is
-    # the scale-preferred (diameter-safe) member of the pair — one driver
-    # slot per oracle, freed for the text-pipeline pack in round 3.
+    # Shares its oracle with dedup_clusters_bigstar, the scale-preferred
+    # (diameter-safe) member of the pair.
     q["dedup_clusters"] = QuerySpec(
         components.dedup_clusters,
         components.DEDUP_CLUSTERS_SQL,
         "ext: connected components over near-dup pairs (iterative min-label "
         "propagation vs recursive-CTE oracle)",
-        driver=False,
     )
-    # Round-5 addition: the end-to-end deliverable (surviving corpus
-    # after collapse). Promoted in the round-6 rotation (slot from
-    # dedup_clusters_bigstar, which it RUNS internally).
+    # The end-to-end deliverable (surviving corpus after collapse); it
+    # runs the dedup_clusters_bigstar pipeline internally.
     q["dedup_collapse"] = QuerySpec(
         components.dedup_collapse,
         components.DEDUP_COLLAPSE_SQL,
         "ext: near-dup collapse to the surviving corpus (LSH pairs -> "
         "star-contraction components -> broadcast anti join)",
     )
-    # Rotated out of the driver window in round 6 (slot went to
-    # dedup_collapse): collapse executes this exact star-contraction
-    # pipeline internally — pairs, O(log n) rounds, fixpoint detection —
-    # then adds the anti-join collapse, so the physical path stays
-    # driver-visible end to end. Cluster-assignment contract keeps
-    # pytest parity (recursive-CTE oracle) + bench.
+    # Star-contraction pipeline — pairs, O(log n) rounds, fixpoint
+    # detection — checked against the recursive-CTE oracle.
     q["dedup_clusters_bigstar"] = QuerySpec(
         components.dedup_clusters_bigstar,
         components.DEDUP_CLUSTERS_SQL,  # same contract, different algorithm
         "ext: same clusters via large-star/small-star alternation "
         "(O(log n) rounds — diameter-safe where min-label is not)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: the SEMANTIC
-    # (embedding-space) twin of dedup_collapse — paraphrase/re-encode
-    # duplicates lexical dedup cannot see, collapsed via hyperplane-LSH
-    # pairs + the same star-contraction CC + broadcast anti-join.
-    # Promoted in the round-8 rotation (slot from embedding_group_
-    # centroid): the paraphrase-dup case lexical dedup misses — also the
-    # pack's slowest bench entry, so driver visibility doubles as a perf
-    # canary.
+    # The SEMANTIC (embedding-space) twin of dedup_collapse —
+    # paraphrase/re-encode duplicates lexical dedup cannot see,
+    # collapsed via hyperplane-LSH pairs + the same star-contraction CC
+    # + broadcast anti-join.
     q["dedup_semantic_collapse"] = QuerySpec(
         components.dedup_semantic_collapse,
         components.DEDUP_SEMANTIC_COLLAPSE_SQL,
@@ -259,56 +226,47 @@ def build() -> dict:
         "broadcast anti join; surviving vectors; refuses percolated "
         "graphs by default since r14 — PercolatedGraphError)",
     )
-    # Round-7 addition, staged for the r8 rotation: the production
-    # ensemble — ONE collapse over the union of the lexical (MinHash)
-    # and semantic (embedding-LSH) duplicate graphs, catching mixed
-    # chains (A~lex~B~sem~C) that per-detector collapses cannot.
+    # The production ensemble — ONE collapse over the union of the
+    # lexical (MinHash) and semantic (embedding-LSH) duplicate graphs,
+    # catching mixed chains (A~lex~B~sem~C) that per-detector collapses
+    # cannot.
     q["dedup_ensemble_collapse"] = QuerySpec(
         components.dedup_ensemble_collapse,
         components.DEDUP_ENSEMBLE_COLLAPSE_SQL,
         "ext: ensemble near-dup collapse (lexical + semantic pair "
         "graphs unioned, joint star-contraction CC, broadcast anti "
         "join; refuses percolated graphs by default since r14)",
-        driver=False,
         bench=False,  # composes paths the pack already times
         # individually (MinHash pairs, embedding-LSH pairs, the two
         # collapses) — benching the union would double-count them
     )
-    # Round-13 addition, born from the sf1 sweep's percolation finding
-    # (SCALING.md): the exact pre-collapse alarm a production pipeline
-    # runs before dedup_semantic_collapse may delete anything. Staged
-    # for a future scored slot; pytest-parity meanwhile.
+    # Born from the sf1 sweep's percolation finding (SCALING.md): the
+    # exact pre-collapse alarm a production pipeline runs before
+    # dedup_semantic_collapse may delete anything.
     q["dedup_semantic_guardrail"] = QuerySpec(
         components.dedup_semantic_guardrail,
         components.DEDUP_SEMANTIC_GUARDRAIL_SQL,
         "ext: pre-collapse percolation guardrail (component-size scalar "
         "report over the embedding dup graph; exact ppm share + alarm)",
-        driver=False,
         bench=False,  # prefix of dedup_semantic_collapse, already timed
     )
 
     # --- Pipeline composition ---
     from . import pipeline
 
-    # pytest-parity only: the staged twin shares this oracle and is the
-    # production (materialize-once) shape — it keeps the driver slot.
+    # Shares its oracle with corpus_clean_staged, the materialize-once
+    # shape.
     q["corpus_clean"] = QuerySpec(
         pipeline.corpus_clean,
         pipeline.CORPUS_CLEAN_SQL,
         "ext: composed cleaning pipeline (quality → dedup → near-dup drop)",
-        driver=False,
     )
-    # Rotated out of the driver window in round 6 (slot went to
-    # data_mixture_resample): its stage signals are driver-visible
-    # through corpus_filter_funnel (the same filters as conditional
-    # sums) and the dedup rows; the staged-materialization plan stays
-    # pinned in tests. Keeps pytest parity + bench.
+    # The staged-materialization plan is pinned in tests.
     q["corpus_clean_staged"] = QuerySpec(
         pipeline.corpus_clean_staged,
         pipeline.CORPUS_CLEAN_SQL,  # identical semantics, staged execution
         "ext: staged cleaning pipeline (shingle table materialized once, "
         "reused by every dedup consumer — the 100 TB run shape)",
-        driver=False,
     )
 
     # --- LLM-pipeline text ops: contamination / chunking / PII / split ---
@@ -319,14 +277,11 @@ def build() -> dict:
         tp.CONTAMINATION_SQL,
         "ext: benchmark-contamination scan (broadcast shingle semi-join)",
     )
-    # Round-7 addition, staged for the r8 rotation: the REMOVAL follow-up
-    # to the contamination scan — span-level eval-set decontamination
-    # (contamination_ngram flags whole documents; this salvages them by
-    # cutting the leaked passage, GPT-3-style n-gram decontamination as
-    # exact-substring removal via the span_scrub machinery).
-    # Promoted in the round-8 rotation (slot from doc_tfidf_topterms):
-    # eval-set decontamination is the single most user-critical staged
-    # op — table stakes for a training pipeline.
+    # The REMOVAL follow-up to the contamination scan — span-level
+    # eval-set decontamination (contamination_ngram flags whole
+    # documents; this salvages them by cutting the leaked passage,
+    # GPT-3-style n-gram decontamination as exact-substring removal via
+    # the span_scrub machinery).
     q["decontaminate_spans"] = QuerySpec(
         dedup.decontaminate_spans,
         dedup.DECONTAMINATE_SPANS_SQL,
@@ -334,147 +289,120 @@ def build() -> dict:
         "span hashes, merged-interval removal, corpus text never "
         "shuffles)",
     )
-    # Rotated out of the driver window in round 7 (slot went to
-    # doc_tfidf_cosine_pairs): posexplode token-window projection is the
-    # same physical kernel seq_packing and duplicated_spans keep
-    # driver-visible; keeps pytest parity + bench.
     q["doc_chunks"] = QuerySpec(
         tp.doc_chunks,
         tp.DOC_CHUNKS_SQL,
         "ext: sliding-window token chunking (posexplode, pure codegen)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: the WARC→documents
-    # bridge — HTML boilerplate strip as a flavor-neutral regex chain
-    # (behavior proven byte-for-byte on constructed HTML in pytest, the
-    # pii_scrub convention; fixture is markup-free so the oracle pins
-    # the expression tree).
+    # The WARC→documents bridge — HTML boilerplate strip as a
+    # flavor-neutral regex chain (behavior proven byte-for-byte on
+    # constructed HTML in pytest, the pii_scrub convention; fixture is
+    # markup-free so the oracle pins the expression tree).
     q["doc_html_extract"] = QuerySpec(
         tp.doc_html_extract,
         tp.DOC_HTML_EXTRACT_SQL,
         "ext: HTML->text extraction report (chained codegen "
         "regexp_replace, zero Python)",
-        driver=False,
     )
     q["pii_scrub"] = QuerySpec(
         tp.pii_scrub,
         tp.PII_SCRUB_SQL,
         "ext: PII inventory + redacted-text hash (chained regexp_replace)",
     )
-    # Promoted in the round-4 rotation (slot from brand_revenue): Gopher-
-    # style repetition quality signals, shuffle-free higher-order-function
-    # compute; drop branches proven on adversarial rows in
-    # tests/test_repetition_filter.py.
+    # Gopher-style repetition quality signals, shuffle-free
+    # higher-order-function compute; drop branches proven on adversarial
+    # rows in tests/test_repetition_filter.py.
     q["doc_repetition_filter"] = QuerySpec(
         text_analysis.doc_repetition_filter,
         text_analysis.DOC_REPETITION_SQL,
         "ext: repetition quality filter (top-unigram/bigram share)",
     )
-    # Promoted in the round-6 rotation (slot from events_props_extract):
-    # inverted-index build + corpus-level term statistics — the CCNet-
-    # style quality filter, exact-int64 so partition order can't drift it.
+    # Inverted-index build + corpus-level term statistics — the
+    # CCNet-style quality filter, exact-int64 so partition order can't
+    # drift it.
     q["doc_token_rarity"] = QuerySpec(
         text_analysis.doc_token_rarity,
         text_analysis.DOC_TOKEN_RARITY_SQL,
         "ext: corpus-statistics quality filter (CCNet-perplexity "
         "stand-in: exact mean token frequency + rare-token ratio)",
     )
-    # Round-7 addition, staged for the r8 rotation: the tokenizer-
-    # training data op — smallest frequency-ranked vocabulary covering
-    # the target share of corpus token instances, with exact integer
-    # cut semantics (window cumsum runs on the VOCAB, never the corpus).
-    # Promoted in the round-8 rotation (slot from events_value_by_user_
-    # salted, whose skew-rewrite signal events_share_of_key_total keeps
-    # scored): the tokenizer-training-data op.
+    # The tokenizer-training data op — smallest frequency-ranked
+    # vocabulary covering the target share of corpus token instances,
+    # with exact integer cut semantics (window cumsum runs on the VOCAB,
+    # never the corpus).
     q["vocab_coverage_build"] = QuerySpec(
         text_analysis.vocab_coverage_build,
         text_analysis.VOCAB_COVERAGE_SQL,
         "ext: coverage-target vocabulary build (corpus-linear counts "
         "shuffle; rank/cumsum over vocab only)",
     )
-    # Round-7 addition, staged for the r8 rotation: the ENCODE step
-    # after vocabulary training — broadcast-vocab tokenization with
-    # UNK/OOV accounting and an order-sensitive sequence hash.
+    # The ENCODE step after vocabulary training — broadcast-vocab
+    # tokenization with UNK/OOV accounting and an order-sensitive
+    # sequence hash.
     q["doc_tokenize_with_vocab"] = QuerySpec(
         text_analysis.doc_tokenize_with_vocab,
         text_analysis.DOC_TOKENIZE_VOCAB_SQL,
         "ext: vocabulary application / encoding (broadcast vocab join, "
         "OOV accounting, positional-xor sequence hash)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: percentile scoring
-    # WITHOUT the global sort — histogram ECDF (bin counts + a bounded
-    # 1000-row cumulative + broadcast join back), the curriculum/
-    # threshold op done scale-correctly.
+    # Percentile scoring WITHOUT the global sort — histogram ECDF (bin
+    # counts + a bounded 1000-row cumulative + broadcast join back), the
+    # curriculum/threshold op done scale-correctly.
     q["doc_quality_ecdf"] = QuerySpec(
         text_analysis.doc_quality_ecdf,
         text_analysis.DOC_QUALITY_ECDF_SQL,
         "ext: quality percentile via histogram ECDF (no corpus sort; "
         "cumulative over bounded bins, broadcast join back)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: phrase discovery —
-    # PMI-ranked corpus collocations (ranking by the exact lift ratio;
-    # log is monotone so no transcendental enters the contract).
+    # Phrase discovery — PMI-ranked corpus collocations (ranking by the
+    # exact lift ratio; log is monotone so no transcendental enters the
+    # contract).
     q["corpus_collocations"] = QuerySpec(
         text_analysis.corpus_collocations,
         text_analysis.CORPUS_COLLOCATIONS_SQL,
         "ext: PMI collocation mining (two partial-agg count shuffles, "
         "support floor, TakeOrderedAndProject top-K)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: the SECOND-ORDER
-    # rung of the corpus-LM quality ladder (unigram rarity above) —
-    # per-doc mean bigram conditional probability in exact ppm.
+    # The SECOND-ORDER rung of the corpus-LM quality ladder (unigram
+    # rarity above) — per-doc mean bigram conditional probability in
+    # exact ppm.
     q["doc_bigram_lm_score"] = QuerySpec(
         text_analysis.doc_bigram_lm_score,
         text_analysis.DOC_BIGRAM_LM_SQL,
         "ext: bigram-LM quality score (exact integer conditional "
         "probabilities, corpus tokenized once)",
-        driver=False,
     )
-    # Rotated out of the driver window in round 8 (slot went to
-    # decontaminate_spans): the idf-weighting signal stays driver-
-    # visible through doc_tfidf_cosine_pairs (built on the same df/
-    # weight machinery) and the per-doc top-K WindowGroupLimit through
-    # train_stratified_sample; keeps pytest parity + bench.
-    # Round-8 addition, staged for the r9 rotation: model-based quality
-    # scoring (the CCNet/FineWeb classifier stage) — a frozen linear
-    # model over hashing-trick token features, inference as ONE
-    # zero-shuffle codegen fold per document; exact fixed-point logit
-    # so the keep decision is bit-identical across engines.
+    # Model-based quality scoring (the CCNet/FineWeb classifier stage) —
+    # a frozen linear model over hashing-trick token features, inference
+    # as ONE zero-shuffle codegen fold per document; exact fixed-point
+    # logit so the keep decision is bit-identical across engines.
     q["doc_quality_classifier"] = QuerySpec(
         text_analysis.doc_quality_classifier,
         text_analysis.DOC_QUALITY_CLASSIFIER_SQL,
         "ext: hashed-feature linear quality classifier (zero-shuffle "
         "codegen inference, exact int64 logit)",
-        driver=False,
     )
-    # Round-8 additions, staged for the r9 rotation: the redundancy-
-    # growth pair — per-doc n-gram novelty (marginal information by
-    # arrival order) and the dedup-saturation curve (duplicate rate per
-    # corpus cohort — the is-the-next-crawl-worth-it report).
+    # The redundancy-growth pair — per-doc n-gram novelty (marginal
+    # information by arrival order) and the dedup-saturation curve
+    # (duplicate rate per corpus cohort — the is-the-next-crawl-worth-it
+    # report).
     q["doc_ngram_novelty"] = QuerySpec(
         text_analysis.doc_ngram_novelty,
         text_analysis.DOC_NGRAM_NOVELTY_SQL,
         "ext: per-doc n-gram novelty vs earlier corpus (first-seen "
         "min-agg on the shingle key, exact ppm)",
-        driver=False,
     )
     q["corpus_dedup_saturation"] = QuerySpec(
         text_analysis.corpus_dedup_saturation,
         text_analysis.CORPUS_DEDUP_SATURATION_SQL,
         "ext: dedup saturation curve (exact-dup rate per id-range "
         "cohort; one digest shuffle + broadcast bounds)",
-        driver=False,
     )
     q["doc_tfidf_topterms"] = QuerySpec(
         text_analysis.doc_tfidf_topterms,
         text_analysis.DOC_TFIDF_SQL,
         "ext: TF-IDF-style top-K terms per doc (fixed-point, log-free)",
-        driver=False,
     )
-    # Promoted in the round-7 rotation (slot from doc_chunks):
     # SPARSE-vector similarity — the lexical complement of the
     # dense-embedding ANN pack and the rarity-weighted refinement of
     # Jaccard.
@@ -484,57 +412,43 @@ def build() -> dict:
         "ext: idf-weighted cosine pairs over shingle features (exact "
         "int64 dots/norms, bounded posting-list join)",
     )
-    # Rotated out of the driver window in round 7 (slot went to
-    # events_cohort_retention): the stable hash-bucket assignment signal
-    # stays driver-visible via train_stratified_sample (same portable
-    # hash machinery); keeps pytest parity + bench.
     q["train_val_split"] = QuerySpec(
         tp.train_val_split,
         tp.TRAIN_VAL_SPLIT_SQL,
         "ext: stable train/val split + reproducible shuffle key",
-        driver=False,
     )
-    # Promoted in the round-4 rotation (slot from setop_nations):
-    # deterministic per-stratum quota sample; map-side WindowGroupLimit
+    # Deterministic per-stratum quota sample; map-side WindowGroupLimit
     # plan pinned in tests/test_plans.py.
     q["train_stratified_sample"] = QuerySpec(
         tp.train_stratified_sample,
         tp.TRAIN_STRATIFIED_SQL,
         "ext: stratified quota sample (hash-ordered top-K per stratum)",
     )
-    # Round-7 addition, staged for the r8 rotation: the weighted member
-    # of the sampling family — priority sampling (Duffield-Lund-Thorup)
-    # with Horvitz-Thompson adjusted weights, deterministic via exact
-    # rational hash-uniforms (no transcendental pow).
+    # The weighted member of the sampling family — priority sampling
+    # (Duffield-Lund-Thorup) with Horvitz-Thompson adjusted weights,
+    # deterministic via exact rational hash-uniforms (no transcendental
+    # pow).
     q["train_priority_sample"] = QuerySpec(
         tp.train_priority_sample,
         tp.TRAIN_PRIORITY_SAMPLE_SQL,
         "ext: weighted priority sample without replacement "
         "(TakeOrderedAndProject top-K, HT-adjusted weights)",
-        driver=False,
     )
     # Funnel observability: one-pass conditional-sum aggregation of the
-    # four registered corpus filters in production order. Promoted to a
-    # driver slot in round 5 (slot from forecast_revenue).
+    # four registered corpus filters in production order.
     q["corpus_filter_funnel"] = QuerySpec(
         tp.corpus_filter_funnel,
         tp.CORPUS_FILTER_FUNNEL_SQL,
         "ext: corpus filter funnel (per-stage survivor counts, one pass)",
     )
-    # Staged r9 (r10 rotation candidate — a second join:FullOuter
-    # carrier beside events_merge_upsert): crawl-to-crawl incremental
-    # ingest delta via full-outer digest compare.
+    # Crawl-to-crawl incremental ingest delta via full-outer digest
+    # compare.
     q["corpus_snapshot_diff"] = QuerySpec(
         tp.corpus_snapshot_diff,
         tp.CORPUS_SNAPSHOT_DIFF_SQL,
         "ext: corpus snapshot diff (added/removed/changed/unchanged by "
         "digest, FULL OUTER on doc_id)",
-        driver=False,
     )
-    # Round-5 additions: three training-data staples the pipeline pack
-    # lacked. Driver window is full, so all three are pytest-parity +
-    # bench (the oracle-parity test hash-checks every registry entry).
-    # Promoted in the round-6 rotation (slot from corpus_clean_staged).
     q["data_mixture_resample"] = QuerySpec(
         tp.data_mixture_resample,
         tp.DATA_MIXTURE_SQL,
@@ -542,7 +456,6 @@ def build() -> dict:
         "to a target mix (one 5-row agg shuffle; map-side hash-threshold "
         "keep, no sorts)",
     )
-    # Promoted in the round-4 rotation (slot from semi_join_customers):
     # GPT-style concat-and-chunk sequence packing — sharded prefix-sum,
     # one shuffle, per-shard sorted window pass; the training-layout op
     # missing from the pipeline pack until now.
@@ -554,88 +467,50 @@ def build() -> dict:
     )
 
     # --- Relational surface beyond the reference ---
-    # Rotated out of the driver window in round 4 (slot went to
-    # price_quantiles_sketch): ranking-window signal stays driver-visible
-    # via train_stratified_sample (row_number + WindowGroupLimit) and the
-    # two salted-window skew rows. Keeps pytest parity + raw-SQL dual.
     q["window_rank_orders"] = QuerySpec(
         rx.window_rank_orders,
         rx.WINDOW_RANK_SQL,
         "ext: ranking window fn",
-        driver=False,
     )
-    # Rotated out of the driver window in round 8 (slot kept cube_orders
-    # scored after rotation_plan.py falsified its planned demotion): the
-    # star-join broadcast+agg physical shape stays driver-visible
-    # through q2, pricing_summary, and orders_above_customer_avg; keeps
-    # pytest parity + bench + raw-SQL dual.
     q["revenue_by_region"] = QuerySpec(
         rx.revenue_by_region,
         rx.REVENUE_BY_REGION_SQL,
         "ext: 5-table star join",
-        driver=False,
     )
-    # Rotated out of the driver window in round 4 (slot went to
-    # events_sliding_window): ROLLUP grouping-set signal stays driver-
-    # visible via cube_orders (superset) + events_hierarchical_rollup,
-    # and this query keeps pytest parity + its raw-SQL dual.
     q["rollup_lineitem"] = QuerySpec(
         rx.rollup_lineitem,
         rx.ROLLUP_LINEITEM_SQL,
         "ext: ROLLUP grouping sets",
-        driver=False,
     )
-    # Kept scored in round 8: the planned r8 demotion ("grouping-set
-    # expansion stays visible through events_hierarchical_rollup") was
-    # FALSIFIED by scripts/rotation_plan.py — the rollup aggregates
-    # daily bars from hourly partials without an Expand node, so
-    # demoting cube_orders + events_sliding_window together would have
-    # dropped the Expand operator from the scored window entirely. The
-    # r8 slot came from revenue_by_region instead.
+    # Plans an Expand node; events_hierarchical_rollup does not (it
+    # aggregates daily bars from hourly partials), as
+    # scripts/rotation_plan.py showed.
     q["cube_orders"] = QuerySpec(
         rx.cube_orders, rx.CUBE_ORDERS_SQL, "ext: CUBE grouping sets"
     )
-    # Rotated out of the driver window in round 4 (slot went to
-    # seq_packing): Catalyst plans EXISTS/IN subqueries, INTERSECT, and
-    # the contamination broadcast probe as the same LeftSemi physical
-    # join; the anti row below keeps the anti/semi family pinned. Keeps
-    # pytest parity + raw-SQL dual.
+    # Catalyst plans EXISTS/IN subqueries, INTERSECT, and the
+    # contamination broadcast probe as the same LeftSemi physical join.
     q["semi_join_customers"] = QuerySpec(
         rx.semi_join_customers,
         rx.SEMI_JOIN_SQL,
         "ext: left-semi join",
-        driver=False,
     )
-    # Rotated out of the driver window in round 8 (slot went to
-    # events_stream_left_join_replay): the left-anti physical shape
-    # stays driver-visible through dedup_collapse and dedup_semantic_
-    # collapse (broadcast LEFT ANTI survivor cut); keeps pytest parity
-    # + bench + raw-SQL dual.
     q["anti_join_customers"] = QuerySpec(
         rx.anti_join_customers,
         rx.ANTI_JOIN_SQL,
         "ext: left-anti join",
-        driver=False,
     )
-    # Rotated out of the driver window in round 4 (slot went to
-    # train_stratified_sample): Catalyst rewrites INTERSECT/EXCEPT to the
-    # same left-semi/left-anti physical joins the two dedicated slots
-    # above already pin, so this row duplicated their physical signal.
+    # Catalyst rewrites INTERSECT/EXCEPT to the same left-semi/left-anti
+    # physical joins as the two rows above.
     q["setop_nations"] = QuerySpec(
         rx.setop_nations,
         rx.SETOP_NATIONS_SQL,
         "ext: INTERSECT/EXCEPT set ops",
-        driver=False,
     )
-    # Rotated out of the driver window in round 8 (slot went to
-    # doc_bm25_search): A4-A6 stay driver-visible through
-    # pricing_summary (count/min/max/avg) and the two sketch rows
-    # (exact distinct + quantiles); keeps pytest parity + bench + dual.
     q["grouped_stats_orders"] = QuerySpec(
         rx.grouped_stats_orders,
         rx.GROUPED_STATS_SQL,
         "ext: multi-agg stats (A4-A6)",
-        driver=False,
     )
 
     # --- TPC-H-style analytical queries ---
@@ -644,53 +519,30 @@ def build() -> dict:
     q["pricing_summary"] = QuerySpec(
         th.pricing_summary, th.PRICING_SUMMARY_SQL, "ext: TPC-H Q1-style report"
     )
-    # Rotated out of the driver window in round 5 (slot went to
-    # embedding_group_centroid): every physical operator here — selective
-    # dim filters into a fact join, grouped money agg, TakeOrdered top-K —
-    # is driver-visible through q1a/q2, revenue_by_region, and
-    # pricing_summary. Keeps pytest parity + bench entry.
     q["shipping_priority"] = QuerySpec(
         th.shipping_priority,
         th.SHIPPING_PRIORITY_SQL,
         "ext: TPC-H Q3-style top-K join",
-        driver=False,
     )
     q["orders_above_customer_avg"] = QuerySpec(
         th.orders_above_customer_avg,
         th.ORDERS_ABOVE_AVG_SQL,
         "ext: correlated-subquery shape (exact-integer predicate)",
     )
-    # Rotated out of the driver window in round 4 (slot went to
-    # doc_repetition_filter): the star-join drill-down signal stays
-    # driver-visible four times over (revenue_by_region, pricing_summary,
-    # shipping_priority, order_priority_late_ship). Keeps pytest parity.
     q["brand_revenue"] = QuerySpec(
         th.brand_revenue,
         th.BRAND_REVENUE_SQL,
         "ext: star drill-down on part dim",
-        driver=False,
     )
-    # Rotated out of the driver window in round 5 (slot went to
-    # corpus_filter_funnel): a single filter-sum over lineitem whose
-    # pushed-predicate + exact-decimal-agg signal q1a, pricing_summary,
-    # and the funnel's conditional sums all carry. Keeps pytest parity +
-    # bench entry.
     q["forecast_revenue"] = QuerySpec(
         th.forecast_revenue,
         th.FORECAST_REVENUE_SQL,
         "ext: TPC-H Q6-style filter-sum",
-        driver=False,
     )
-    # Rotated out of the driver window in round 8 (slot went to
-    # multimodal_frame_sample): the correlated-EXISTS semi-join plan
-    # stays driver-visible through contamination_ngram's broadcast
-    # semi probe, and the correlated-subquery family keeps
-    # orders_above_customer_avg scored; keeps pytest parity + bench.
     q["order_priority_late_ship"] = QuerySpec(
         th.order_priority_late_ship,
         th.ORDER_PRIORITY_LATE_SQL,
         "ext: TPC-H Q4-style correlated EXISTS (semi-join plan)",
-        driver=False,
     )
 
     # --- Rollups / pivot / semi-structured ---
@@ -701,76 +553,51 @@ def build() -> dict:
         rollups.EVENTS_HIERARCHICAL_ROLLUP_SQL,
         "ext: continuous-aggregate rollup (daily from hourly partials)",
     )
-    # Rotated out of the driver window in round 7 (slot went to
-    # events_cohort_retention): pivot is a grouped conditional-agg
-    # projection whose physical shape (partial-agg groupBy over events)
-    # the rollup + salted rows keep driver-visible; keeps pytest parity
-    # + bench.
     q["events_pivot_by_type"] = QuerySpec(
         rollups.events_pivot_by_type,
         rollups.EVENTS_PIVOT_SQL,
         "ext: pivot long→wide",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: the candlestick/
-    # hypertable continuous-aggregate staple — per-bar first/last as
-    # struct min/max partial aggregates (the shuffle carries bars, not
-    # ticks; no Window over the raw stream).
+    # The candlestick/hypertable continuous-aggregate staple — per-bar
+    # first/last as struct min/max partial aggregates (the shuffle
+    # carries bars, not ticks; no Window over the raw stream).
     q["events_ohlc_bars"] = QuerySpec(
         rollups.events_ohlc_bars,
         rollups.EVENTS_OHLC_SQL,
         "ext: OHLC bars (open/close via struct-extremum partial agg, "
         "one shuffle of bars not ticks)",
-        driver=False,
     )
-    # Promoted in the round-7 rotation (slot from train_val_split): the
-    # canonical events-warehouse report the pack lacked — first-seen
-    # cohorts x day-offset activity, self-join on the already-
-    # partitioned key.
+    # The canonical events-warehouse report — first-seen cohorts x
+    # day-offset activity, self-join on the already-partitioned key.
     q["events_cohort_retention"] = QuerySpec(
         rollups.events_cohort_retention,
         rollups.EVENTS_COHORT_RETENTION_SQL,
         "ext: cohort retention matrix (first-seen day x offset, "
         "distinct active users; partitioning reused across agg+join)",
     )
-    # Rotated out of the driver window in round 6 (slot went to
-    # doc_token_rarity): scalar JSON extraction is a single-expression
-    # projection with no shuffle/join shape of its own, and pii_scrub +
-    # doc_chunks keep string-kernel projection driver-visible. Keeps
-    # pytest parity + bench + raw-SQL signal via its oracle.
     q["events_props_extract"] = QuerySpec(
         rollups.events_props_extract,
         rollups.EVENTS_PROPS_SQL,
         "ext: JSON property extraction (schema-on-use)",
-        driver=False,
     )
 
     # --- Skew handling + sketches ---
     from ..operators import sketches, skew
 
-    # Rotated out of the driver window in round 8 (slot went to
-    # vocab_coverage_build): the equivalence demo's skew-mitigation
-    # signal stays scored via events_share_of_key_total (the window-skew
-    # rewrite with no built-in mitigation); keeps pytest parity + bench.
     q["events_value_by_user_salted"] = QuerySpec(
         skew.events_value_by_user_salted,
         skew.EVENTS_SALTED_SQL,
         "ext: salted two-phase aggregation == plain GROUP BY",
-        driver=False,
     )
-    # Rotated out of the driver window in round 4 (slot went to
-    # doc_tfidf_topterms): its docstring's own measurement shows Spark
-    # >=3.5's WindowGroupLimit beats the manual salted rewrite for
-    # row_number()<=K, and that built-in path is now driver-visible twice
-    # (train_stratified_sample, doc_tfidf_topterms); skew-mitigation
-    # signal stays via the two other salted rows. Keeps pytest parity.
+    # Its docstring's own measurement shows Spark >=3.5's
+    # WindowGroupLimit beats the manual salted rewrite for
+    # row_number()<=K.
     q["events_top3_by_hotkey_salted"] = QuerySpec(
         skew.events_top3_by_hotkey_salted,
         skew.EVENTS_TOP3_HOTKEY_SQL,
         "ext: salted two-phase top-K on a 90%-hot key == plain window "
         "rank (Spark>=3.5's WindowGroupLimit already covers rank "
         "filters; kept as the portable form)",
-        driver=False,
     )
     q["events_share_of_key_total"] = QuerySpec(
         skew.events_share_of_key_total,
@@ -779,22 +606,20 @@ def build() -> dict:
         "groupBy+broadcast join (4.8x vs plain window at 5M rows; the "
         "window-skew case with no built-in mitigation)",
     )
-    # Round-7 additions, staged for the r8 rotation: the ops-side
-    # diagnostics that decide when the skew rewrites apply (hot-key
-    # profile) and whether a new drop is trustworthy (null profile).
+    # The ops-side diagnostics that decide when the skew rewrites apply
+    # (hot-key profile) and whether a new drop is trustworthy (null
+    # profile).
     q["events_key_skew_profile"] = QuerySpec(
         skew.events_key_skew_profile,
         skew.EVENTS_KEY_SKEW_SQL,
         "ext: hot-key skew profile (partial-agg key counts + "
         "TakeOrderedAndProject top-N, exact ppm shares)",
-        driver=False,
     )
     q["events_null_profile"] = QuerySpec(
         skew.events_null_profile,
         skew.EVENTS_NULL_PROFILE_SQL,
         "ext: per-column completeness report (single-pass conditional "
         "sums, one row)",
-        driver=False,
     )
     q["daily_distinct_users_hll"] = QuerySpec(
         sketches.daily_distinct_users_hll,
@@ -802,8 +627,7 @@ def build() -> dict:
         "ext: re-aggregatable HLL distinct rollup (exact count hashed + "
         "in-query error-bound assertion on the sketch)",
     )
-    # Promoted in the round-4 rotation (slot from window_rank_orders):
-    # quantile-sketch twin of the HLL row — exact discrete percentiles
+    # Quantile-sketch twin of the HLL row — exact discrete percentiles
     # hashed, sketch judged in-query by its rank-error guarantee.
     q["price_quantiles_sketch"] = QuerySpec(
         sketches.price_quantiles_sketch,
@@ -811,122 +635,104 @@ def build() -> dict:
         "ext: per-group quantile sketch (exact percentiles hashed + "
         "in-query rank-error assertion on approx_percentile)",
     )
-    # Round-7 addition, staged for the r8 rotation: corpus-monitoring
-    # drift — exact total-variation distance of each source's token
-    # distribution from the corpus (int64 cross-multiplied numerator,
-    # absent-token mass in closed form, one final division).
-    # Round-9 addition, staged for the r10 rotation: hybrid retrieval —
-    # the RAG-stack ranking loop: fixed-point BM25 top-5 fused with the
-    # exact quantized-dot vector top-10 by reciprocal-rank fusion
-    # (1e9 DIV (60+rank) integer fixed point, Cormack k=60); fusion
-    # joins two |queries|×K frames — kilobytes at any corpus size.
+    # Corpus-monitoring drift (source_token_drift, below) — exact
+    # total-variation distance of each source's token distribution from
+    # the corpus (int64 cross-multiplied numerator, absent-token mass in
+    # closed form, one final division).
+    # Hybrid retrieval — the RAG-stack ranking loop: fixed-point BM25
+    # top-5 fused with the exact quantized-dot vector top-10 by
+    # reciprocal-rank fusion (1e9 DIV (60+rank) integer fixed point,
+    # Cormack k=60); fusion joins two |queries|×K frames — kilobytes at
+    # any corpus size.
     from ..operators import retrieval as rtr
 
     q["doc_hybrid_search_rrf"] = QuerySpec(
         rtr.doc_hybrid_search_rrf,
         rtr.DOC_HYBRID_RRF_SQL,
         "ext: hybrid BM25+vector retrieval with exact-integer RRF",
-        driver=False,
     )
-    # Round-9 addition, staged for the r10 rotation: token-budget
-    # quality selection without a global sort — the ECDF histogram
-    # machinery pointed at a token budget (bins that fit entirely +
-    # a greedy running-sum prefix over the ONE straddling bin).
+    # Token-budget quality selection without a global sort — the ECDF
+    # histogram machinery pointed at a token budget (bins that fit
+    # entirely + a greedy running-sum prefix over the ONE straddling
+    # bin).
     q["corpus_budget_select"] = QuerySpec(
         tp.corpus_budget_select,
         tp.CORPUS_BUDGET_SELECT_SQL,
         "ext: token-budget quality selection (histogram threshold, no "
         "global sort, exact int64 membership)",
-        driver=False,
     )
-    # Round-9 addition, staged for the r10 rotation: the padding-
-    # efficiency complement of seq_packing — power-of-two length
-    # buckets with exact padding-waste accounting and batch counts (the
-    # SFT/eval dataloader report). One ≤7-row partial-agg shuffle.
+    # The padding-efficiency complement of seq_packing — power-of-two
+    # length buckets with exact padding-waste accounting and batch
+    # counts (the SFT/eval dataloader report). One ≤7-row partial-agg
+    # shuffle.
     q["seq_length_buckets"] = QuerySpec(
         tp.seq_length_buckets,
         tp.SEQ_LENGTH_BUCKETS_SQL,
         "ext: length-bucketed batch plan (pow2 ceilings, exact padding "
         "waste, scan-bound)",
-        driver=False,
     )
-    # Round-9 addition, staged for the r10 rotation: the ftfy/CCNet-
-    # style encoding trust gate (replacement chars, stray C0/C1
-    # controls, mojibake markers, script profile + dominant vote, exact
-    # ascii_ppm). Zero shuffles — one codegen regexp_count pass; the
-    # ASCII fixture is the clean path, the planted corpus in
+    # The ftfy/CCNet-style encoding trust gate (replacement chars, stray
+    # C0/C1 controls, mojibake markers, script profile + dominant vote,
+    # exact ascii_ppm). Zero shuffles — one codegen regexp_count pass;
+    # the ASCII fixture is the clean path, the planted corpus in
     # tests/test_encoding_screen.py carries the detection signal.
     q["text_encoding_screen"] = QuerySpec(
         text_analysis.text_encoding_screen,
         text_analysis.TEXT_ENCODING_SCREEN_SQL,
         "ext: encoding/mojibake/script QA screen (zero-shuffle codegen)",
-        driver=False,
     )
     q["source_token_drift"] = QuerySpec(
         text_analysis.source_token_drift,
         text_analysis.SOURCE_TOKEN_DRIFT_SQL,
         "ext: per-source token-distribution drift (exact TV distance, "
         "single (source,tok) shuffle)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: ranked keyword
-    # retrieval — fixed-point BM25 (exact int64 tf/df/dl statistics, one
-    # quantized ln per distinct df), top-K per probe query.
+    # Ranked keyword retrieval — fixed-point BM25 (exact int64 tf/df/dl
+    # statistics, one quantized ln per distinct df), top-K per probe
+    # query.
     from ..operators import retrieval
 
-    # Promoted in the round-8 rotation (slot from grouped_stats_orders):
-    # ranked keyword retrieval — the search-side face of the corpus.
     q["doc_bm25_search"] = QuerySpec(
         retrieval.doc_bm25_search,
         retrieval.DOC_BM25_SQL,
         "ext: BM25 top-K retrieval (fixed-point scoring, exact int64 "
         "corpus statistics, per-query row_number)",
     )
-    # Round-7 addition, staged for the r8 rotation: the frequency-sketch
-    # member of the family — per-partition Misra-Gries candidate pass
-    # (bounded memory, Arrow-batched) + exact candidate-restricted
-    # recount, so the OUTPUT is the exact heavy-hitter set and the
-    # oracle is a plain GROUP BY ... HAVING.
+    # The frequency-sketch member of the family — per-partition
+    # Misra-Gries candidate pass (bounded memory, Arrow-batched) + exact
+    # candidate-restricted recount, so the OUTPUT is the exact
+    # heavy-hitter set and the oracle is a plain GROUP BY ... HAVING.
     q["doc_heavy_hitters"] = QuerySpec(
         sketches.doc_heavy_hitters,
         sketches.DOC_HEAVY_HITTERS_SQL,
         "ext: exact corpus heavy hitters via two-phase Misra-Gries "
         "(candidate superset guarantee + exact recount)",
-        driver=False,
     )
 
     # --- Multimodal plumbing ---
-    # Rotated out of the driver window in round 4 (slot went to
-    # events_campaign_range_join): scalar metadata projection over the
-    # binary column is strictly weaker signal than multimodal_decode_stub,
-    # which exercises the same payloads through the full Arrow mapInPandas
-    # decode path AND is hash-checked since round 4. Keeps pytest parity.
+    # Scalar metadata projection over the binary column.
     q["multimodal_meta"] = QuerySpec(
         multimodal.multimodal_meta,
         multimodal.MULTIMODAL_META_SQL,
         "ext: binary payload metadata",
-        driver=False,
     )
-    # Rotated out of the driver window in round 7 (slot went to
-    # span_scrub): the REAL PPM/BMP decoder now carries the Arrow
-    # mapInPandas binary-decode path in pytest (valid/truncated/poison
-    # corpora), so the stand-in decoder's hash row was the weaker twin.
-    # Keeps pytest parity + bench.
+    # Stand-in decoder over the Arrow mapInPandas binary-decode path;
+    # the REAL PPM/BMP decoder is tested on valid/truncated/poison
+    # corpora.
     q["multimodal_decode_stub"] = QuerySpec(
         multimodal.multimodal_decode_stub,
         multimodal.MULTIMODAL_DECODE_SQL,  # hex-expansion byte twin
         "ext: Arrow-batched decode/feature extraction (deterministic "
         "stand-in decoder, hash-checked via byte-arithmetic DuckDB twin)",
-        driver=False,
     )
 
-    # Round-8 addition, staged for the r9 rotation: the ingest story
-    # proven END TO END rather than per stage — documents rendered as
-    # HTTP-framed HTML-wrapped WARC archives (distributed write, plain
-    # + gzip), re-ingested through the WARC DataSource -> HTTP strip ->
-    # HTML strip chain, hash-compared against html_to_text of the raw
-    # table. bench=False: the query writes temp archives (a round-trip
-    # harness, not a steady-state operator).
+    # The ingest story proven END TO END rather than per stage —
+    # documents rendered as HTTP-framed HTML-wrapped WARC archives
+    # (distributed write, plain + gzip), re-ingested through the WARC
+    # DataSource -> HTTP strip -> HTML strip chain, hash-compared
+    # against html_to_text of the raw table. bench=False: the query
+    # writes temp archives (a round-trip harness, not a steady-state
+    # operator).
     from ..sources.warc import WARC_ROUNDTRIP_SQL, warc_corpus_roundtrip
 
     q["warc_corpus_roundtrip"] = QuerySpec(
@@ -934,27 +740,22 @@ def build() -> dict:
         WARC_ROUNDTRIP_SQL,
         "ext: WARC->documents ingest round trip (DataSource scan, HTTP "
         "header strip, HTML boilerplate strip; doc_id via Target-URI)",
-        driver=False,
         bench=False,
     )
 
     # --- Similarity search (embeddings) ---
     # Vector AGGREGATION (vs the pairwise ops below): element-wise group
-    # centroids via posexplode + partial-agg-bounded groupBy — the M-step
-    # of a distributed k-means. pytest parity + bench (window full).
+    # centroids via posexplode + partial-agg-bounded groupBy — the
+    # M-step of a distributed k-means.
     from ..operators import vectors
 
-    # Promoted to a driver slot in round 5 (slot from shipping_priority);
-    # rotated out again in round 8 (slot went to dedup_semantic_collapse):
-    # the posexplode + partial-agg centroid path runs INSIDE
-    # embedding_kmeans_quality's driver-scored fit (M-step), and the
-    # streaming centroid replay pins the same contract. Keeps pytest
-    # parity + bench.
+    # The same posexplode + partial-agg centroid path runs inside
+    # embedding_kmeans_quality's fit (M-step), and the streaming
+    # centroid replay pins the same contract.
     q["embedding_group_centroid"] = QuerySpec(
         vectors.embedding_group_centroid,
         vectors.EMBEDDING_GROUP_CENTROID_SQL,
         "ext: per-group embedding centroid (exact quantized sums)",
-        driver=False,
     )
     # Round-5 addition: full distributed Lloyd's (iterative E/M rounds in
     # exact quantized-integer space — the trajectory, not just the final
@@ -965,7 +766,6 @@ def build() -> dict:
         None,
         "ext: distributed k-means (deterministic init, codegen E-step "
         "on broadcast centroid literals, partial-agg M-step)",
-        driver=False,
         bench=False,  # an ITERATIVE FIT (3 E/M rounds = ~8 sequential
         # jobs), not a single-plan query: benching it times job-scheduling
         # overhead x iterations, not an operator — its scale metric is
@@ -986,7 +786,6 @@ def build() -> dict:
         None,
         "ext: BPE merge training (dict-resident loop, greedy fold "
         "application, deterministic tie-break)",
-        driver=False,
         bench=False,  # iterative fit — same rationale as embedding_kmeans
     )
     # The APPLY half: merges applied to the word DICTIONARY (the
@@ -998,32 +797,27 @@ def build() -> dict:
         None,
         "ext: BPE apply/segmentation stats (dict-side fold, broadcast "
         "word->n_subwords map, exact compression ppm)",
-        driver=False,
         bench=False,  # runs the training loop internally
     )
-    # Round-18 addition (judge r17 item 7), staged for the r19 rotation:
-    # the BPE pair's driver-HASHABLE surface. bpe_merge_train /
+    # The BPE pair's HASHABLE surface. bpe_merge_train /
     # bpe_segment_stats stay rows-only (iterative global argmax), but
     # their quality contract — corpus compression beats the
     # merges-never-applied 1.0 floor, apply covers every word, merge
     # freqs non-increasing (the classic BPE invariant) — is a one-row
     # boolean the oracle asserts TRUE while bit-recomputing the dict
-    # totals, exactly the embedding_kmeans_quality pattern. Ends the
-    # pair's aging outside the staleness cadence (last driver look r11).
+    # totals, exactly the embedding_kmeans_quality pattern.
     q["bpe_quality_floor"] = QuerySpec(
         bpe.bpe_quality_floor,
         bpe.BPE_QUALITY_FLOOR_SQL,
         "ext: BPE quality floor (exact dict totals, compression >= "
         "23/20 by integer cross-multiply, monotone merge freqs)",
-        driver=False,
         bench=False,  # runs the training loop internally — same
         # job-scheduling-overhead rationale as bpe_segment_stats
     )
-    # Round-7 addition (slot from ann_bruteforce_topk): the k-means
-    # path's driver-visible quality signal — the iterative fit itself
-    # stays rows-only above, but its WCSS-vs-null-model floor is a
-    # one-row hash check exactly like the ANN recall floors (the oracle
-    # recomputes the k=1 baseline WCSS to the bit and asserts the
+    # The k-means path's hashable quality signal — the iterative fit
+    # itself stays rows-only above, but its WCSS-vs-null-model floor is
+    # a one-row hash check exactly like the ANN recall floors (the
+    # oracle recomputes the k=1 baseline WCSS to the bit and asserts the
     # floor boolean TRUE).
     q["embedding_kmeans_quality"] = QuerySpec(
         vectors.embedding_kmeans_quality,
@@ -1033,10 +827,10 @@ def build() -> dict:
         bench=False,  # runs the iterative fit internally — same
         # job-scheduling-overhead rationale as embedding_kmeans
     )
-    # Round-6 addition, staged for the r7 rotation: the vector pack's
-    # streaming face — the centroid table maintained under continuous
-    # ingest, drained AvailableNow against the BATCH centroid's oracle
-    # (integer sums commute, so stream == batch exactly).
+    # The vector pack's streaming face — the centroid table maintained
+    # under continuous ingest, drained AvailableNow against the BATCH
+    # centroid's oracle (integer sums commute, so stream == batch
+    # exactly).
     from ..streaming.vectors import embedding_centroid_replay
 
     q["embedding_centroid_replay"] = QuerySpec(
@@ -1044,55 +838,41 @@ def build() -> dict:
         vectors.EMBEDDING_GROUP_CENTROID_SQL,
         "ext: streaming per-group centroid maintenance (algebraic "
         "state, O(groups x dims)), replayed against the batch oracle",
-        driver=False,
         bench=False,  # replay harness; the events replays carry
         # streaming cost in the pack
     )
-    # Round-6 addition, staged for the r7 rotation: the SQ8 compression
-    # step an embedding store applies before indexing, with exact
-    # integer reconstruction-error accounting.
-    # Round-8 addition, staged for the r9 rotation: the ingest-time QA
-    # screen an embedding store runs before any index build — zero/
-    # near-zero norms, non-finite elements, dimensionality agreement;
-    # quantization matches the search stack's own (_QUANT), so a vector
-    # flagged here is exactly one that misbehaves there.
+    # The ingest-time QA screen an embedding store runs before any index
+    # build — zero/near-zero norms, non-finite elements, dimensionality
+    # agreement; quantization matches the search stack's own (_QUANT),
+    # so a vector flagged here is exactly one that misbehaves there.
     q["embedding_quality_screen"] = QuerySpec(
         vectors.embedding_quality_screen,
         vectors.EMBEDDING_QUALITY_SCREEN_SQL,
         "ext: embedding ingest QA (exact quantized norms, degenerate/"
         "non-finite flags, dim check; zero-shuffle codegen pass)",
-        driver=False,
     )
+    # The SQ8 compression step an embedding store applies before
+    # indexing, with exact integer reconstruction-error accounting.
     q["embedding_int8_quantize"] = QuerySpec(
         vectors.embedding_int8_quantize,
         vectors.EMBEDDING_INT8_QUANTIZE_SQL,
         "ext: per-vector symmetric int8 quantization (exact integer "
         "rounding + reconstruction-error sums, pure codegen)",
-        driver=False,
     )
-    # Rotated out of the driver window in round 7 (slot went to
-    # embedding_kmeans_quality): ann_lsh_recall RUNS this exact
-    # brute-force path as its baseline side AND its oracle recomputes
-    # both sides exactly, so the standalone top-K row duplicated the
-    # driver signal (the same rationale that demoted ann_lsh_topk in
-    # round 6). Keeps pytest parity + bench.
+    # ann_lsh_recall runs this exact brute-force path as its baseline
+    # side.
     q["ann_bruteforce_topk"] = QuerySpec(
         similarity.ann_bruteforce_topk,
         similarity.ANN_BRUTEFORCE_SQL,
         "ext: brute-force top-K similarity (quantized MIPS)",
-        driver=False,
     )
-    # Rotated out of the driver window in round 6 (slot went to
-    # documents_dedup_replay): ann_lsh_recall RUNS this same bucketed
-    # LSH path end-to-end AND hash-asserts its quality floor, so the
-    # top-K row duplicated the driver signal. Keeps pytest parity +
-    # bench.
+    # ann_lsh_recall runs this same bucketed LSH path end-to-end and
+    # hash-asserts its quality floor.
     q["ann_lsh_topk"] = QuerySpec(
         similarity.ann_lsh_topk,
         similarity.ANN_LSH_SQL,
         "ext: multi-table hyperplane-LSH bucketed top-K (8x12 planes, "
         "OR-construction, radius-2 probes)",
-        driver=False,
     )
     q["ann_lsh_recall"] = QuerySpec(
         similarity.ann_lsh_recall,
@@ -1100,27 +880,25 @@ def build() -> dict:
         "ext: LSH recall vs exact baseline, exact-value-checked with an "
         "in-query floor the oracle asserts TRUE",
     )
-    # Round-7 addition, staged for the r8 rotation: the compression-
-    # quality gate for the SQ8 path — search over the int8 codes vs the
-    # exact baseline, both sides SQL-expressible so the oracle
-    # recomputes recall exactly (the strong ANN_LSH_RECALL contract).
+    # The compression-quality gate for the SQ8 path — search over the
+    # int8 codes vs the exact baseline, both sides SQL-expressible so
+    # the oracle recomputes recall exactly (the strong ANN_LSH_RECALL
+    # contract).
     q["ann_sq8_recall"] = QuerySpec(
         vectors.ann_sq8_recall,
         vectors.ANN_SQ8_RECALL_SQL,
         "ext: SQ8-code search recall vs exact baseline (exact integer "
         "scoring over compressed codes, oracle recomputes both sides)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: the last rung of the
-    # vector-compression ladder (SQ8 above it) — PQ codebooks, nibble
-    # codes, ADC shortlist, exact rerank of candidates only.
+    # The last rung of the vector-compression ladder (SQ8 above it) — PQ
+    # codebooks, nibble codes, ADC shortlist, exact rerank of candidates
+    # only.
     q["ann_pq_recall"] = QuerySpec(
         vectors.ann_pq_recall,
         vectors.ANN_PQ_RECALL_SQL,
         "ext: product-quantization shortlist+rerank recall floor "
         "(8x16 integer codebooks, ADC lookup tables, exact rerank "
         "bounded by queries x candidates)",
-        driver=False,
         bench=False,  # runs 8 iterative subspace fits — the kmeans
         # job-scheduling-overhead rationale
     )
@@ -1130,178 +908,145 @@ def build() -> dict:
         "ext: IVF recall floor assertion (fit not SQL-expressible, so the "
         "oracle checks sizes + asserts the floor boolean)",
     )
-    # Round-17 addition (judge r16 item 4), staged for the r18 rotation:
-    # the PRODUCTION serving composition — IVF pruning first, 8-bit ADC
-    # within the probed lists only, corpus-independent shortlist into the
-    # exact rerank. Replaces flat PQ's corpus-proportional rerank cost;
-    # measured recall@5 0.90-0.98 across sf0.001-sf1 vs the 0.70 floor.
+    # The PRODUCTION serving composition — IVF pruning first, 8-bit ADC
+    # within the probed lists only, corpus-independent shortlist into
+    # the exact rerank. Replaces flat PQ's corpus-proportional rerank
+    # cost; measured recall@5 0.90-0.98 across sf0.001-sf1 vs the 0.70
+    # floor.
     q["ann_ivfpq_recall"] = QuerySpec(
         vectors.ann_ivfpq_recall,
         vectors.ANN_IVFPQ_RECALL_SQL,
         "ext: IVF-PQ recall floor (probed-list ADC with 8-bit codebooks, "
         "BroadcastHashJoin on the cell id, corpus-independent shortlist "
         "+ exact rerank; fits on one bounded sample collect)",
-        driver=False,
     )
 
     # --- Event-stream ops, batch form (events) ---
-    # Rotated out of the driver window in round 4 (slot went to
-    # events_stream_join_replay): events_tumbling_replay runs the SAME
-    # logical window aggregation through the streaming engine against the
-    # SAME oracle, so the batch row duplicated its hash signal. Keeps
-    # pytest parity + bench entry.
+    # events_tumbling_replay runs the SAME logical window aggregation
+    # through the streaming engine against the SAME oracle.
     q["events_tumbling_window"] = QuerySpec(
         events.events_tumbling_window,
         events.EVENTS_TUMBLING_SQL,
         "ext: tumbling-window aggregation",
-        driver=False,
     )
-    # Rotated out of the driver window in round 8 (slot went to
-    # events_latest_state): windowed event-time aggregation stays
-    # driver-visible through events_tumbling_replay (same window
-    # machinery through the streaming engine) and the hierarchical
-    # rollup; keeps pytest parity + bench.
     q["events_sliding_window"] = QuerySpec(
         events.events_sliding_window,
         events.EVENTS_SLIDING_SQL,
         "ext: sliding-window aggregation (10 min / 5 min overlap)",
-        driver=False,
     )
-    # Rotated out of the driver window in round 5 (slot went to
-    # events_session_replay): the replay runs the SAME gap-session
-    # semantics through the streaming engine's merging-window state
-    # against an oracle derived from this query's SQL, completing the
-    # stateful-shape trio (windowed/join/merging state) as driver hashes.
-    # The lag/cumsum batch formulation keeps pytest parity + bench entry.
+    # The lag/cumsum batch formulation; events_session_replay runs the
+    # SAME gap-session semantics through the streaming engine's
+    # merging-window state against an oracle derived from this SQL.
     q["events_sessionize"] = QuerySpec(
         events.events_sessionize,
         events.EVENTS_SESSIONIZE_SQL,
         "ext: gap sessionization",
-        driver=False,
     )
     q["events_asof_join"] = QuerySpec(
         events.events_asof_join,
         events.EVENTS_ASOF_SQL,
         "ext: as-of join (union + carry-forward)",
     )
-    # Round-7 addition, staged for the r8 rotation: the ordered
-    # conversion-funnel report (strict step ordering per user — not
-    # three independent EXISTS filters); every step keyed on user_id so
-    # the partitioning is reused across all three aggregations.
-    # Round-7 addition, staged for the r8 rotation: robust data-quality
-    # screen — exact median/MAD per event type (rank selection, no
-    # interpolated percentile) with an integer-cross-multiply Hampel
-    # cutoff; the exact adjudicator for the sketch-based screens.
+    # The ordered conversion-funnel report (events_conversion_funnel,
+    # below; strict step ordering per user — not three independent
+    # EXISTS filters); every step keyed on user_id so the partitioning
+    # is reused across all three aggregations.
+    # Robust data-quality screen — exact median/MAD per event type (rank
+    # selection, no interpolated percentile) with an
+    # integer-cross-multiply Hampel cutoff; the exact adjudicator for
+    # the sketch-based screens.
     q["events_robust_outliers"] = QuerySpec(
         events.events_robust_outliers,
         events.EVENTS_ROBUST_OUTLIERS_SQL,
         "ext: median/MAD Hampel outlier profile (exact rank-selected "
         "medians, integer cutoff)",
-        driver=False,
     )
-    # Round-7 additions, staged for the r8 rotation: the CDC/warehouse
-    # maintenance pair — latest-record-wins compaction (the batch form
-    # of a MERGE/upsert sink, computed as a partial-agg struct-max so
-    # the shuffle moves keys not history) and the SCD2 validity-interval
-    # history build (three window functions over ONE partitioning).
-    # Round-7 addition, staged for the r8 rotation: the bounded ROWS
-    # window frame (trailing rolling stats) — the one window-frame
-    # shape the ranking/unbounded/event-time windows don't exercise.
-    # Round-7 addition, staged for the r8 rotation: exact fixed-width
-    # histogram — the profiling shape between the exact quantile ranks
-    # and the sketch screens; integer binning so bucket-edge values
-    # cannot land differently across engines.
+    # The CDC/warehouse maintenance pair (events_latest_state,
+    # events_scd2_intervals, below) — latest-record-wins compaction (the
+    # batch form of a MERGE/upsert sink, computed as a partial-agg
+    # struct-max so the shuffle moves keys not history) and the SCD2
+    # validity-interval history build (three window functions over ONE
+    # partitioning).
+    # Exact fixed-width histogram — the profiling shape between the
+    # exact quantile ranks and the sketch screens; integer binning so
+    # bucket-edge values cannot land differently across engines.
+    # Rolling stats: the bounded ROWS window frame — the one
+    # window-frame shape the ranking/unbounded/event-time windows don't
+    # exercise.
     q["events_value_histogram"] = QuerySpec(
         events.events_value_histogram,
         events.EVENTS_HISTOGRAM_SQL,
         "ext: exact fixed-width value histogram (integer binning, "
         "sparse re-aggregatable bins, one partial-agg shuffle)",
-        driver=False,
     )
     q["events_rolling_stats"] = QuerySpec(
         events.events_rolling_stats,
         events.EVENTS_ROLLING_SQL,
         "ext: trailing rolling stats (bounded ROWS frame, single "
         "window pass, O(n) per key via running add/evict)",
-        driver=False,
     )
-    # Round-7 addition, staged for the r8 rotation: the retention
-    # matrix's forward-looking sibling — who LEFT (last-seen via the
-    # same partial-agg max the CDC compaction uses).
+    # The retention matrix's forward-looking sibling — who LEFT
+    # (last-seen via the same partial-agg max the CDC compaction uses).
     q["events_churn_report"] = QuerySpec(
         events.events_churn_report,
         events.EVENTS_CHURN_SQL,
         "ext: churn screen (per-user last-seen + days-inactive vs the "
         "corpus clock, exact epoch-day arithmetic)",
-        driver=False,
     )
-    # Round-9 addition, staged for the r10 rotation: the churn report's
-    # feed-side sibling — per-type freshness/lag vs the broadcast corpus
-    # clock with trailing-window volumes and exact ppm share (which FEED
-    # stopped, vs which user left). One |types|-row partial-agg shuffle.
+    # The churn report's feed-side sibling — per-type freshness/lag vs
+    # the broadcast corpus clock with trailing-window volumes and exact
+    # ppm share (which FEED stopped, vs which user left). One
+    # |types|-row partial-agg shuffle.
     q["events_freshness_report"] = QuerySpec(
         events.events_freshness_report,
         events.EVENTS_FRESHNESS_SQL,
         "ext: per-type data-freshness report (lag vs corpus clock, "
         "trailing-hour/day volumes, exact share ppm)",
-        driver=False,
     )
-    # Round-9 addition, staged for the r10 rotation: declarative row-
-    # level expectations (the Great-Expectations shape) — one corpus
-    # pass of conditional sums + a constant-size unpivot; rules are
-    # module constants shared verbatim with the oracle, so predicate
-    # drift between engines is impossible by construction.
+    # Declarative row-level expectations (the Great-Expectations shape)
+    # — one corpus pass of conditional sums + a constant-size unpivot;
+    # rules are module constants shared verbatim with the oracle, so
+    # predicate drift between engines is impossible by construction.
     q["events_expectations_report"] = QuerySpec(
         events.events_expectations_report,
         events.EVENTS_EXPECTATIONS_SQL,
         "ext: declarative data-quality expectations (per-rule violation "
         "counts + exact ppm, one-pass conditional sums)",
-        driver=False,
     )
-    # Both promoted in the round-8 rotation (slots from
-    # events_sliding_window and cube_orders): the CDC/warehouse pair,
-    # both measured FLAT at 10x (SCALING.md).
-    # Round-8 additions, staged for the r9 rotation: the MERGE/upsert
-    # APPLY (full-outer join — the one join type no other registered
-    # plan exercises) and regular-grid gap filling with LOCF (the
-    # hypertable time_bucket_gapfill staple; the window pass runs over
-    # the generated grid, never over raw events).
-    # Round-8 additions, staged for the r9 rotation: the rolling
-    # distinct-actives curve (WAU — distinct is not subtractable, so
-    # the sliding window becomes the explode-to-window rewrite over
-    # unique user-days) and the pairwise audience-overlap report (the
-    # intersection question HLL sketches cannot answer).
+    # The MERGE/upsert APPLY and regular-grid gap filling
+    # (events_merge_upsert, events_gap_fill, below) — full-outer join,
+    # and LOCF over the generated grid (the hypertable
+    # time_bucket_gapfill staple), never over raw events.
+    # The rolling distinct-actives curve (WAU — distinct is not
+    # subtractable, so the sliding window becomes the explode-to-window
+    # rewrite over unique user-days) and the pairwise audience-overlap
+    # report (the intersection question HLL sketches cannot answer).
     q["events_rolling_active_users"] = QuerySpec(
         events.events_rolling_active_users,
         events.EVENTS_ROLLING_ACTIVE_SQL,
         "ext: trailing 7-day distinct active users (user-day distinct "
         "first, x7 fanout, one distinct count per report day)",
-        driver=False,
     )
     q["events_audience_overlap"] = QuerySpec(
         events.events_audience_overlap,
         events.EVENTS_AUDIENCE_OVERLAP_SQL,
         "ext: pairwise audience intersection + Jaccard across event "
         "types (distinct (type,user) frame self-join, broadcast sizes)",
-        driver=False,
     )
-    # Round-8 additions, staged for the r9 rotation: exact-moment OLS
-    # trend (the distributed-regression shape — five int64 moments per
-    # type are the whole state) and the first-order behavior model
-    # (transition matrix with exact ppm conditionals).
+    # Exact-moment OLS trend (the distributed-regression shape — five
+    # int64 moments per type are the whole state) and the first-order
+    # behavior model (transition matrix with exact ppm conditionals).
     q["events_daily_trend"] = QuerySpec(
         events.events_daily_trend,
         events.EVENTS_DAILY_TREND_SQL,
         "ext: per-type OLS daily-value trend (exact int64 cross-"
         "moments, re-aggregatable; floats only at the final division)",
-        driver=False,
     )
     q["events_markov_transitions"] = QuerySpec(
         events.events_markov_transitions,
         events.EVENTS_MARKOV_SQL,
         "ext: event-type transition matrix (one user_id window "
         "shuffle, type-bounded pair agg, exact ppm conditionals)",
-        driver=False,
     )
     q["events_merge_upsert"] = QuerySpec(
         events.events_merge_upsert,
@@ -1309,14 +1054,12 @@ def build() -> dict:
         "ext: MERGE/upsert apply (snapshot full-outer change batch, "
         "insert/update/carry audit; struct-max sides share the join's "
         "user_id partitioning)",
-        driver=False,
     )
     q["events_gap_fill"] = QuerySpec(
         events.events_gap_fill,
         events.EVENTS_GAP_FILL_SQL,
         "ext: time-bucket gap fill + LOCF (dense grid generated from a "
         "1-row bounds agg; one partial-agg shuffle over raw events)",
-        driver=False,
     )
     q["events_latest_state"] = QuerySpec(
         events.events_latest_state,
@@ -1335,29 +1078,26 @@ def build() -> dict:
         events.EVENTS_FUNNEL_SQL,
         "ext: ordered conversion funnel (view -> click -> purchase, "
         "strictly increasing timestamps; same-key agg cascade)",
-        driver=False,
     )
-    # Promoted to a driver slot in the round-4 rotation (see COVERAGE.md):
-    # the only interval-containment join in the window; bucketed-range-join
-    # plan (no nested loop) pinned in tests/test_plans.py.
+    # Interval-containment join; bucketed-range-join plan (no nested
+    # loop) pinned in tests/test_plans.py.
     q["events_campaign_range_join"] = QuerySpec(
         events.events_campaign_range_join,
         events.EVENTS_RANGE_JOIN_SQL,
         "ext: range (interval) join via coarse-bucket equi-join",
     )
-    # Benched (not driver-slotted — window full): date-bounded agg over
-    # the day-partitioned events layout; PartitionFilters pinned in
-    # tests/test_plans.py, oracle parity in pytest.
+    # Date-bounded agg over the day-partitioned events layout;
+    # PartitionFilters pinned in tests/test_plans.py, oracle parity in
+    # pytest.
     q["events_day_bounded_agg"] = QuerySpec(
         events.events_day_bounded_agg,
         events.EVENTS_DAY_BOUNDED_SQL,
         "ext: partition-pruned date-range scan (day-partitioned layout)",
-        driver=False,
     )
 
-    # Streaming made driver-visible: AvailableNow replay of the streaming
-    # tumbling aggregation against the BATCH query's oracle — the Kappa
-    # equivalence as a hash check, not just a pytest.
+    # AvailableNow replay of the streaming tumbling aggregation against
+    # the BATCH query's oracle — the Kappa equivalence as a hash check,
+    # not just a pytest.
     from ..streaming.events import events_tumbling_replay
 
     q["events_tumbling_replay"] = QuerySpec(
@@ -1366,19 +1106,16 @@ def build() -> dict:
         "ext: Structured Streaming tumbling counts, batch-replayed "
         "(AvailableNow → memory sink) against the batch oracle",
     )
-    # Batch form of the stream-stream join; pytest parity + bench entry
-    # (the driver slot carries the streaming replay below, which proves
-    # the batch plan's semantics AND the streaming engine in one hash).
+    # Batch form of the stream-stream join; the streaming replay below
+    # proves the batch plan's semantics AND the streaming engine in one
+    # hash.
     q["events_click_purchase_join"] = QuerySpec(
         events.events_click_purchase_join,
         events.EVENTS_STREAM_JOIN_SQL,
         "ext: attribution join, batch form (equi-join on user + "
         "time-range predicate)",
-        driver=False,
     )
-    # Promoted in the round-4 rotation (slot from events_tumbling_window):
-    # watermarked stream-stream inner join drained AvailableNow — the
-    # last major Structured Streaming surface (joins) as a driver hash.
+    # Watermarked stream-stream inner join drained AvailableNow.
     from ..streaming.events import events_stream_join_replay
 
     q["events_stream_join_replay"] = QuerySpec(
@@ -1387,14 +1124,13 @@ def build() -> dict:
         "ext: watermarked stream-stream join (click->purchase "
         "attribution), batch-replayed against the batch oracle",
     )
-    # Round-7 addition, staged for the r8 rotation: the OUTER streaming
-    # join shape (inner replay above emits matches eagerly; the NULL row
-    # for a never-converted click only exists because the watermark
-    # proves no purchase can still arrive — eviction-time emission, the
-    # one join semantics the four stateful replays don't cover). The
-    # drain is staged as ordered microbatches with two-sided heartbeat
-    # sentinels; see the function docstring for the watermark-policy
-    # finding.
+    # The OUTER streaming join shape (inner replay above emits matches
+    # eagerly; the NULL row for a never-converted click only exists
+    # because the watermark proves no purchase can still arrive —
+    # eviction-time emission, the one join semantics the four stateful
+    # replays don't cover). The drain is staged as ordered microbatches
+    # with two-sided heartbeat sentinels; see the function docstring for
+    # the watermark-policy finding.
     from ..streaming.events import events_stream_left_join_replay
 
     q["events_stream_left_join_replay"] = QuerySpec(
@@ -1403,19 +1139,13 @@ def build() -> dict:
         "ext: watermarked stream-stream LEFT OUTER join (null rows "
         "emitted on watermark-proven no-match), batch-replayed against "
         "the batch LEFT JOIN oracle",
-        # Promoted in the round-8 rotation (slot from anti_join_
-        # customers, whose left-anti physical shape dedup_collapse's
-        # broadcast anti join keeps scored): eviction-time null emission
-        # is the one join semantics the five driver-proven streaming
-        # shapes don't cover.
         bench=False,  # replay harness; the three events replays carry
         # streaming cost in the pack
     )
-    # Staged r9 (r10 rotation candidate): stream-STATIC dimension
-    # enrichment — the per-microbatch static-side join + running
-    # aggregate, the one canonical Structured Streaming join shape the
-    # stream-stream replays don't cover. Exact Kappa equivalence to the
-    # batch join gives it a plain SQL oracle.
+    # Stream-STATIC dimension enrichment — the per-microbatch
+    # static-side join + running aggregate, the one canonical Structured
+    # Streaming join shape the stream-stream replays don't cover. Exact
+    # Kappa equivalence to the batch join gives it a plain SQL oracle.
     from ..streaming.events import (
         EVENTS_STREAM_ENRICH_SQL,
         events_stream_enrich_replay,
@@ -1427,12 +1157,10 @@ def build() -> dict:
         "ext: stream-static dimension enrichment (broadcast static side "
         "per microbatch) + running segment totals, batch-replayed",
         bench=False,  # replay harness, same policy as the join replays
-        driver=False,
     )
-    # Round-5 addition, promoted in the round-6 rotation (slot from
-    # ann_lsh_topk): the streaming ingest-dedup face as a driver-scored
-    # AvailableNow replay (digest-set equality vs batch DISTINCT) — the
-    # fourth stateful streaming shape (first-seen dedup state) beside
+    # The streaming ingest-dedup face as an AvailableNow replay
+    # (digest-set equality vs batch DISTINCT) — the fourth stateful
+    # streaming shape (first-seen dedup state) beside
     # tumbling/session/join.
     from ..streaming.dedup import (
         DOCUMENTS_DEDUP_REPLAY_SQL,
@@ -1448,8 +1176,7 @@ def build() -> dict:
         # overhead, not the operator; the three events replays already
         # carry streaming cost in the pack
     )
-    # Promoted in the round-7 rotation (slot from events_pivot_by_type):
-    # the NEAR-dup ingest face — stream-static LSH band join against a
+    # The NEAR-dup ingest face — stream-static LSH band join against a
     # batch-built snapshot, stateless per-row signatures (proven equal
     # to the batch groupBy signatures bit-for-bit in tests), signature-
     # agreement verify — the streaming shape none of the four stateful
@@ -1467,9 +1194,7 @@ def build() -> dict:
         "a pure-SQL signature oracle",
         bench=False,  # same rationale as the digest replay above
     )
-    # Promoted in the round-5 rotation (slot from events_sessionize):
-    # native session_window MERGING state drained AvailableNow — the
-    # third and last stateful streaming shape as a driver hash.
+    # Native session_window MERGING state drained AvailableNow.
     from ..streaming.events import events_session_replay
 
     q["events_session_replay"] = QuerySpec(
@@ -1481,67 +1206,48 @@ def build() -> dict:
 
     # --- Rows-only checks (engine-specific estimates / float drift /
     # mapInPandas paths with no SQL twin) trail the oracle pack ---
-    # Rows-only entries whose signal is covered by an oracle-checked twin
-    # are pytest-parity only (driver=False) as of round 3 — their slots
-    # went to the text-pipeline / recall / streaming-replay rows above:
-    # eda_sketch_profile (grouped_stats + daily_distinct_users_hll cover
-    # A4-A6 and the sketch contract), ann_ivf_topk (ann_ivf_recall RUNS
-    # the full IVF path and hash-asserts its quality), ann_cosine_topk_
-    # float (quantized brute force is the oracle-exact twin; float/pandas
-    # equivalence is pytest-pinned), multimodal_frame_sample (decode_stub
-    # keeps the mapInPandas binary-payload pattern driver-visible).
-    # r14 (judge r13 item 7): converted from rows-only to oracle-hashed
-    # via the exact+bounded-boolean contract (estimates emit as
-    # within-error booleans the oracle asserts TRUE, exact columns
-    # compare directly) — the daily_distinct_users_hll pattern.
+    # Oracle-hashed via the exact+bounded-boolean contract (estimates
+    # emit as within-error booleans the oracle asserts TRUE, exact
+    # columns compare directly) — the daily_distinct_users_hll pattern.
     q["eda_sketch_profile"] = QuerySpec(
         sketches.eda_sketch_profile,
         sketches.EDA_SKETCH_PROFILE_SQL,
         "ext: one-pass sketch EDA (A4-A6 at scale; exact scalars + "
         "error-bound booleans, oracle-hashed)",
-        driver=False,
     )
     q["ann_ivf_topk"] = QuerySpec(
         similarity.ann_ivf_topk,
         None,  # iterative k-means fit — not SQL-expressible
         "ext: IVF-style ANN (integer k-means cells, 2-probe)",
-        driver=False,
     )
     q["ann_cosine_topk_float"] = QuerySpec(
         similarity.ann_cosine_topk_float,
         None,  # float path: cross-engine low-bit drift → rows-only check
         "ext: true-cosine top-K (float path)",
-        driver=False,
     )
-    # Round-8 addition, staged for the r9 rotation: the AUDIO face of
-    # the multimodal pillar — payload bytes as little-endian PCM16,
-    # reduced to exact int64 energy/peak/zero-crossings + derived RMS
-    # in one vectorized numpy pass per Arrow batch; true two's-
-    # complement sign semantics pinned on constructed negative samples
-    # in tests.
+    # The AUDIO face of the multimodal pillar — payload bytes as
+    # little-endian PCM16, reduced to exact int64
+    # energy/peak/zero-crossings + derived RMS in one vectorized numpy
+    # pass per Arrow batch; true two's-complement sign semantics pinned
+    # on constructed negative samples in tests.
     q["multimodal_audio_stats"] = QuerySpec(
         multimodal.multimodal_audio_stats,
         multimodal.MULTIMODAL_AUDIO_STATS_SQL,
         "ext: PCM16 waveform stats over audio-like payloads (Arrow "
         "mapInPandas, exact integer energy/peak/crossings)",
-        driver=False,
     )
-    # Staged r9 (r10 rotation candidate): perceptual image near-dup —
-    # 56-bit dHash signatures via Arrow mapInPandas over the binary
-    # payload, pigeonhole-banded candidate join + popcount verify (the
-    # simhash scale shape applied to the multimodal pillar).
+    # Perceptual image near-dup — 56-bit dHash signatures via Arrow
+    # mapInPandas over the binary payload, pigeonhole-banded candidate
+    # join + popcount verify (the simhash scale shape applied to the
+    # multimodal pillar).
     q["multimodal_dhash_neardup"] = QuerySpec(
         multimodal.multimodal_dhash_neardup,
         multimodal.MULTIMODAL_DHASH_SQL,
         "ext: perceptual near-dup over binary payloads (dHash grid "
         "signature, banded join, hamming<=3 verify)",
-        driver=False,
     )
-    # Promoted in the round-8 rotation (slot from order_priority_late_
-    # ship, whose semi-join plan contamination_ngram's broadcast probe
-    # keeps scored): restores the multimodal pillar's driver-scored row
-    # (lost in the r7 rotation) via the ASCII-substring DuckDB twin over
-    # the mapInPandas binary frame-sampling path.
+    # The mapInPandas binary frame-sampling path, checked through an
+    # ASCII-substring DuckDB twin.
     q["multimodal_frame_sample"] = QuerySpec(
         multimodal.multimodal_frame_sample,
         multimodal.FRAME_SAMPLE_SQL,  # ASCII-substring byte twin
@@ -1549,20 +1255,18 @@ def build() -> dict:
     )
 
     # --- SQL duals for the relational extensions (portable text; parses in
-    # Spark SQL and DuckDB alike). pytest-only: the oracle already runs
-    # this exact text, so a driver slot would duplicate the signal. ---
+    # Spark SQL and DuckDB alike) ---
     from .testdata_queries import make_raw_sql_runner
 
     # All-pairs exact near-dup: the correctness baseline for
-    # dedup_embedding_lsh's recall test. pytest-only — its broadcast
-    # all-pairs matmul (driver collect) is the shape the registered
-    # bucketed operator exists to replace at scale.
+    # dedup_embedding_lsh's recall test. Its broadcast all-pairs matmul
+    # (driver collect) is the shape the registered bucketed operator
+    # exists to replace at scale.
     q["dedup_embedding_cosine"] = QuerySpec(
         similarity.dedup_embedding_cosine,
         similarity.DEDUP_EMBEDDING_COSINE_SQL,
         "ext: embedding-cosine near-dup, all-pairs exact baseline",
         bench=False,
-        driver=False,
     )
 
     for name, sql in [
@@ -1580,7 +1284,6 @@ def build() -> dict:
             sql,
             f"S7 + dual of {name}",
             bench=False,
-            driver=False,
         )
 
     return q

@@ -14,8 +14,8 @@ then reports:
   (their signal is invisible to the driver);
 - DEMOTION candidates: scored entries whose entire signature is covered
   by the UNION of the other scored entries (their physical signal is
-  redundant at the driver boundary — rotation comments should name the
-  covering queries, and this report checks that the claim still holds).
+  redundant at the driver boundary; the report names up to three
+  covering queries per shape).
 
 Signatures are a deliberately coarse lens: they capture the PHYSICAL
 shape (what Catalyst actually plans), not the semantic contract — a
@@ -24,11 +24,21 @@ worth scoring (e.g. q1a vs pricing_summary). Harness-style entries that
 execute work at build time (streaming replays, iterative fits, the WARC
 round trip) are tagged statically instead of planned.
 
-Usage: python scripts/rotation_plan.py [--json out.json]
+With ``--plan ROTATION_rN_PLAN.json`` (``{"round": N, "promote": [...],
+"demote": [...]}``) it instead checks the staged swap through
+``registry.swap`` and reports the physical-signature union of the current
+window against the window after the swap: the shapes the swap preserves,
+gains and loses. Signatures cover the window and the plan's names, the
+``*_sql`` duals included, so a swap can be shape-checked before
+``DRIVER_WINDOW`` is edited.
+
+Usage: python scripts/rotation_plan.py [--plan ROTATION_rN_PLAN.json]
+                                       [--json out.json]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -79,18 +89,10 @@ def signature(name, spec, spark) -> set[str]:
     return kinds
 
 
-def main() -> None:
+def _candidates(spark) -> dict:
     from hadoop_hive_analysis_spark.plans.registry import QUERIES
-    from hadoop_hive_analysis_spark.session import get_spark
 
-    spark = get_spark("hha-rotation-plan")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    sigs: dict[str, set[str]] = {}
-    for name, spec in QUERIES.items():
-        if name.endswith("_sql"):
-            continue  # duals re-run oracle text; never rotation targets
-        sigs[name] = signature(name, spec, spark)
+    sigs = {n: signature(n, spec, spark) for n, spec in QUERIES.items()}
 
     scored = {n for n in sigs if QUERIES[n].driver}
     staged = {
@@ -120,7 +122,7 @@ def main() -> None:
             }
             demotions[n] = covering
 
-    out = {
+    return {
         "driver_slots": len(scored),
         "staged_with_oracle": len(staged),
         "driver_signature_union": sorted(driver_union),
@@ -132,10 +134,68 @@ def main() -> None:
             "still require human judgment"
         ),
     }
+
+
+def _swap_diff(spark, plan_round, new_window: tuple[str, ...]) -> dict:
+    """The physical-signature union of the current window vs
+    ``new_window``: which shapes a swap keeps, gains and loses."""
+    from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
+
+    sigs = {
+        name: signature(name, QUERIES[name], spark)
+        for name in sorted(set(DRIVER_WINDOW) | set(new_window))
+    }
+
+    def union(window) -> set[str]:
+        u: set[str] = set()
+        for name in window:
+            u |= sigs[name]
+        return {k for k in u if not k.startswith("error:")}
+
+    u_old, u_new = union(DRIVER_WINDOW), union(new_window)
+    return {
+        "round": plan_round,
+        "window": len(new_window),
+        "shapes_preserved": sorted(u_old & u_new),
+        "shapes_gained": sorted(u_new - u_old),
+        "shapes_lost": sorted(u_old - u_new),
+        "errors": {
+            name: sorted(s)
+            for name, s in sigs.items()
+            if any(k.startswith("error:") for k in s)
+        },
+    }
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument(
+        "--plan",
+        help="ROTATION_rN_PLAN.json ({round, promote, demote}) to validate "
+        "and diff against the current window",
+    )
+    ap.add_argument("--json", dest="json_out", help="write report as JSON")
+    args = ap.parse_args()
+
+    from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, swap
+    from hadoop_hive_analysis_spark.session import get_spark
+
+    plan = new_window = None
+    if args.plan:
+        with open(args.plan) as f:
+            plan = json.load(f)
+        # an invalid plan fails here, before a session starts
+        new_window = swap(DRIVER_WINDOW, plan["promote"], plan["demote"])
+
+    spark = get_spark("hha-rotation-plan")
+    spark.sparkContext.setLogLevel("ERROR")
+    if new_window is None:
+        out = _candidates(spark)
+    else:
+        out = _swap_diff(spark, plan["round"], new_window)
     print(json.dumps(out, indent=1))
-    if "--json" in sys.argv:
-        path = sys.argv[sys.argv.index("--json") + 1]
-        with open(path, "w") as f:
+    if args.json_out:
+        with open(args.json_out, "w") as f:
             json.dump(out, f, indent=1)
     spark.stop()
 

@@ -15,11 +15,11 @@ CHECKED, not asserted:
 - Print the staleness histogram (entries grouped by last-green round) for
   the oracle-backed, currently-rested population — the exact table the
   judge rebuilt — plus never-driver-hashed entries.
-- With ``--plan ROTATION_rN_PLAN.json``: validate the swap against the live
-  registry (promotes currently rested, demotes currently scored, counts
-  equal, window stays at the 50-slot cap) and print the POST-SWAP residue
-  assuming the promotes go green in round N, so the plan's note can quote a
-  recomputable list instead of a hand-waved claim.
+- With ``--plan ROTATION_rN_PLAN.json``: validate the swap with
+  ``registry.swap`` (promotes currently rested, demotes currently scored,
+  no unknown, repeated or overlapping names, counts equal) and print the
+  POST-SWAP residue assuming the promotes go green in round N, so the
+  plan's note can quote a recomputable list instead of a hand-waved claim.
 
 Usage:
     python scripts/staleness_report.py [--plan ROTATION_r16_PLAN.json]
@@ -75,7 +75,11 @@ def main() -> int:
     ap.add_argument("--json", dest="json_out", help="write report as JSON")
     args = ap.parse_args()
 
-    from hadoop_hive_analysis_spark.plans.registry import QUERIES
+    from hadoop_hive_analysis_spark.plans.registry import (
+        DRIVER_WINDOW,
+        QUERIES,
+        swap,
+    )
 
     last = load_history()
     cur_round = max(last.values())
@@ -130,33 +134,15 @@ def main() -> int:
     if args.plan:
         with open(args.plan) as f:
             plan = json.load(f)
-        promote, demote = set(plan["promote"]), set(plan["demote"])
-        errs = []
-        unknown = (promote | demote) - set(QUERIES)
-        if unknown:
-            errs.append(f"unknown entries: {sorted(unknown)}")
-        bad_p = [n for n in promote if n in QUERIES and QUERIES[n].driver]
-        if bad_p:
-            errs.append(f"promotes already scored: {sorted(bad_p)}")
-        bad_d = [n for n in demote if n in QUERIES and not QUERIES[n].driver]
-        if bad_d:
-            errs.append(f"demotes already rested: {sorted(bad_d)}")
-        if len(promote) != len(demote):
-            errs.append(
-                f"swap not balanced: {len(promote)} promote vs "
-                f"{len(demote)} demote (window must stay at the slot cap)"
-            )
-        if errs:
-            print(f"\nPLAN {args.plan}: INVALID")
-            for e in errs:
-                print(f"  - {e}")
-            report["plan"] = {"valid": False, "errors": errs}
+        try:
+            post_window = swap(DRIVER_WINDOW, plan["promote"], plan["demote"])
+        except ValueError as exc:
+            print(f"\nPLAN {args.plan}: INVALID\n  - {exc}")
+            report["plan"] = {"valid": False, "errors": [str(exc)]}
         else:
             plan_round = plan.get("round", cur_round + 1)
             post: dict[str, int | None] = dict(last.items())
-            post_scored = (
-                {r["name"] for r in scored} - demote
-            ) | promote
+            post_scored = set(post_window)
             for n in post_scored:  # assume the swap window goes green
                 post[n] = plan_round
             residue = [
@@ -171,7 +157,10 @@ def main() -> int:
                     residue, f"POST-SWAP residue if r{plan_round} goes green"
                 ),
             }
-            print(f"\nPLAN {args.plan}: VALID (balanced {len(promote)}-swap)")
+            print(
+                f"\nPLAN {args.plan}: VALID "
+                f"(balanced {len(plan['promote'])}-swap)"
+            )
 
     if args.json_out:
         with open(args.json_out, "w") as f:

@@ -79,6 +79,7 @@ def test_emit_fits_driver_tail_window(tmp_path, capsys):
         "unit": "sec",
         "queries": {f"some_long_query_name_{i:02d}": 1.2345 for i in range(50)},
         "sf": 0.1,
+        "cpus": 4,
         "errors": {f"failing_query_{i}": "AnalysisException: " + "x" * 180 for i in range(4)},
         "store_sales": {"rows": 20000000, "dat_bytes": 9e8, "gen_sec": 30.0,
                         "queries": {"q1a": 3.1, "q1b": 2.2, "q1c": 2.5, "q2": 2.8}},
@@ -95,11 +96,18 @@ def test_emit_fits_driver_tail_window(tmp_path, capsys):
     assert parsed["metric"] == "query_pack_wall_clock"
     assert len(parsed["queries"]) == 50
     assert parsed["sf"] == 0.1
+    assert parsed["cpus"] == 4
     # full detail is preserved in the sidecar
     with open(tmp_path / "BENCH_FULL.json") as f:
         full = json.load(f)
     assert full["regressions_vs_prior"] == out["regressions_vs_prior"]
     assert full["errors"] == out["errors"]
+    # a line the prune chain cannot shrink falls back to the minimal
+    # contract fields, which still carry cpus
+    out["unprunable"] = "x" * 400
+    parsed = json.loads(_emit_line(capsys, out, tmp_path))
+    assert "unprunable" not in parsed
+    assert parsed["cpus"] == 4
 
 
 def test_emit_small_output_untouched(tmp_path, capsys):

@@ -2,15 +2,16 @@
 
 Round 14's judge caught a rotation plan whose prose staleness claim was
 false. ``scripts/staleness_report.py`` derives the claims from the
-committed ``CORRECTNESS_r*.json`` history; these tests pin that the staged
-r19 plan (a) is a valid balanced swap against the live registry — which
-already carries the executed r18 overlay — and (b) its claims hold by
-recomputation: every promote is either never-driver-hashed (the staged
-bpe_quality_floor getting its first hash) or a member of the OLDEST
-rested oracle-backed cohort (the 10 r12 leftovers the r18 plan named and
-deferred), and after the swap the oldest remaining cohort is exactly the
-16-entry r13 cohort (≤6 rounds old at r19, draining in the r20 plan) —
-so the note cannot silently rot the way the r15 plan's did.
+committed ``CORRECTNESS_r*.json`` history; these tests pin that the
+staged r19 plan (a) is a valid balanced swap against the live
+``registry.DRIVER_WINDOW`` (checked by ``registry.swap``) and (b) its
+claims hold by recomputation: every promote is either
+never-driver-hashed (the staged bpe_quality_floor getting its first
+hash) or a member of the OLDEST rested oracle-backed cohort (the 10 r12
+leftovers the r18 plan named and deferred), and after the swap the
+oldest remaining cohort is exactly the 16-entry r13 cohort (≤6 rounds
+old at r19, draining in the r20 plan) — so the note cannot silently rot
+the way the r15 plan's did.
 """
 
 from __future__ import annotations
@@ -18,7 +19,12 @@ from __future__ import annotations
 import json
 import os
 
-from hadoop_hive_analysis_spark.plans.registry import QUERIES
+from hadoop_hive_analysis_spark.plans.registry import (
+    DRIVER_SLOT_CAP,
+    DRIVER_WINDOW,
+    QUERIES,
+    swap,
+)
 from scripts.staleness_report import load_history
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -54,15 +60,10 @@ def _plan() -> dict:
 
 def test_r19_plan_is_a_valid_balanced_swap():
     plan = _plan()
-    promote, demote = set(plan["promote"]), set(plan["demote"])
-    assert promote.isdisjoint(demote)
-    assert len(promote) == len(demote), "window must stay at the slot cap"
-    unknown = (promote | demote) - set(QUERIES)
-    assert not unknown, f"plan names unknown entries: {sorted(unknown)}"
-    already_scored = [n for n in promote if QUERIES[n].driver]
-    assert not already_scored, f"promotes already scored: {already_scored}"
-    already_rested = [n for n in demote if not QUERIES[n].driver]
-    assert not already_rested, f"demotes already rested: {already_rested}"
+    window = swap(DRIVER_WINDOW, plan["promote"], plan["demote"])
+    assert len(window) == DRIVER_SLOT_CAP, "window must stay at the slot cap"
+    assert set(plan["promote"]) <= set(window)
+    assert set(plan["demote"]).isdisjoint(window)
 
 
 def test_r19_promotes_drain_the_oldest_cohort():
@@ -91,9 +92,7 @@ def test_r19_post_swap_leftover_is_exactly_the_r13_cohort():
     oracle-backed entries (drained in r20)."""
     plan = _plan()
     last = load_history()
-    post_scored = (
-        {n for n, s in QUERIES.items() if s.driver} - set(plan["demote"])
-    ) | set(plan["promote"])
+    post_scored = set(swap(DRIVER_WINDOW, plan["promote"], plan["demote"]))
     oracle_backed = {n for n, s in QUERIES.items() if s.oracle is not None}
     oldest = min(last[n] for n in oracle_backed - post_scored if n in last)
     leftover = {
